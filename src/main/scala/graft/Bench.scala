@@ -73,7 +73,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_BROADCAST_MAXROWS")
       .foreach(spark.conf.set(graft.ops.Joins.MaxBroadcastRowsKey, _))
     sys.env.get("SPARK_GRAFT_CC_LOCALMAX")
-      .foreach(spark.conf.set(graft.ops.Dedup.LocalSolveMaxBytesKey, _))
+      .foreach(spark.conf.set(graft.ops.Joins.LocalSolveMaxBytesKey, _))
     // Untimed session warmup: JIT, codegen compiler, parquet reader, and
     // shuffle machinery init otherwise land entirely on the first query.
     // Touch every table once so per-query timings measure the operator,

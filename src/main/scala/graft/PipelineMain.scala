@@ -267,10 +267,12 @@ object PipelineMain {
       StructField("task_id", StringType), StructField("parent_id", StringType),
       StructField("name", StringType)))
     // users/perms dropped before emit (reference pops them); parent
-    // NULL/''/'0' normalized; breadcrumbs + 8 level columns
+    // NULL/''/'0' normalized; breadcrumbs + 8 level columns, resolved on
+    // the driver (the rows are parsed here already: no job before the sink)
     val df = spark.createDataFrame(rows.asJava, schema)
       .withColumn("parent_id", Transforms.normalizeParent(col("parent_id")))
-    val withPaths = Closure.breadcrumbs(df, "task_id", "parent_id", "name")
+    val withPaths =
+      Closure.breadcrumbsResolved(df, "task_id", "parent_id", "name")
     Transforms.dedupByPk(
       Closure.withLevelColumns(withPaths, "task", 8).drop("path"),
       Seq("task_id"), Seq(col("name")))

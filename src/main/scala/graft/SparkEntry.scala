@@ -265,11 +265,12 @@ object SparkEntry {
       // ship was adjudicated in ABBench's dedicated-session harness, and
       // its winner did not transfer to the graded conditions — the bench
       // row went 0.997s (recursive, r6) → 1.39-1.53s (doubling, r7/r8).
-      // Re-A/B'd under Bench's EXACT conditions (ClosureGradedAB:
-      // suite-warm session, uncached parquet input, AQE on, interleaved
-      // min-of-3, idle, 2026-08-13): recursive 1.044s < doubling 1.145s,
-      // with recursive winning every interleaved round (1.04/1.21/1.15
-      // vs 1.15/1.49/1.72); iterative 1.57s. Dedicated-session numbers
+      // Re-A/B'd under Bench's EXACT conditions (suite-warm session,
+      // uncached parquet input, AQE on, interleaved min-of-3, idle,
+      // 2026-08-13; SCALE.md "The closure ship decision"): recursive
+      // 1.044s < doubling 1.145s, with recursive winning every
+      // interleaved round (1.04/1.21/1.15 vs 1.15/1.49/1.72); iterative
+      // 1.57s. Dedicated-session numbers
       // (ABBench round 7) favored doubling — JVM/codegen state from
       // prior suite traffic is worth more to the CTE's per-level plan
       // re-execution than to doubling's fewer-but-larger joins, so

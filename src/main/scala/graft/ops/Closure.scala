@@ -1,8 +1,12 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
+
 import graft.Materialize
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Recursive-hierarchy operators — the one capability the reference needs
   * that Spark has no single built-in operator for.
@@ -11,17 +15,217 @@ import org.apache.spark.sql.functions._
   * `SAMPLE-PROJECT-BUDGET-REPORT.md:53-70`) and the Python breadcrumb
   * walkers (`dlt_fetch_timecamp.py:313-346`, `:527-547`).
   *
-  * Implementation is an iterative fixpoint of DataFrame self-joins. Scale
-  * notes: hierarchy dimensions are small (tasks/groups — thousands to low
-  * millions of rows) even when the fact side is 100 TB, so each iteration
-  * is a small shuffle (or broadcast) join; an eager
-  * [[graft.Materialize.checkpoint]] per iteration truncates lineage so the
-  * plan stays O(1) per step instead of growing exponentially (local
-  * checkpoint on local mode, reliable checkpoint on clusters — see
-  * Materialize's scaladoc), and the final closure is typically broadcast
-  * against the fact table by AQE.
+  * Two routes, picked per call by the shared local-solve gate
+  * ([[graft.ops.Joins.fitsLocalSolve]], the gate of the CC union-find):
+  *
+  *  - Below the gate, [[resolve]] brings the dimension's rows to the
+  *    driver once and [[Hierarchy]] walks id → parent there. Rows that
+  *    are already a local relation (parsed on the driver, as in the
+  *    pipeline) cost zero jobs; any other frame is materialized once
+  *    (one forcing job) and its blocks collected. Hierarchy dimensions
+  *    are small (tasks/groups — thousands to low millions of rows) even
+  *    when the fact side is 100 TB, so this removes the one-job-per-tree-
+  *    level cost the distributed walks pay, and the reports read the
+  *    resolved hierarchy through a broadcast variable instead of joining
+  *    a closure table.
+  *  - Above the gate (or with duplicate or non-string ids) the
+  *    distributed operators below run: an iterative fixpoint of DataFrame
+  *    self-joins, pointer doubling, or Spark 4's recursive CTE. Each
+  *    iteration is a small shuffle (or broadcast) join; an eager
+  *    [[graft.Materialize.checkpoint]] per iteration truncates lineage so
+  *    the plan stays O(1) per step instead of growing exponentially
+  *    (local checkpoint on local mode, reliable checkpoint on clusters —
+  *    see Materialize's scaladoc).
   */
 object Closure {
+
+  /** A parent-pointer hierarchy resolved on the driver: row `i` has id
+    * `ids(i)` (NULL ids are kept for alignment but never looked up) and
+    * parent `parents(i)` (NULL = root); `up(i)` is the parent's row, or
+    * -1 when the parent is NULL or missing from the table. Ids are
+    * unique — [[Hierarchy.resolve]] refuses anything else.
+    *
+    * Same semantics as the distributed operators, `maxDepth` boundary
+    * included:
+    *  - [[ancestors]] is the reflexive closure row set of one node: self,
+    *    then each ancestor at walk distance ≤ `maxDepth`, a missing
+    *    parent id as the last one (the distributed closures emit it
+    *    too), and on a cycle each ancestor ONCE — the set semantics of
+    *    [[transitiveClosure]];
+    *  - [[paths]] is [[breadcrumbs]]' `path`: a missing parent starts its
+    *    own path, levels ≤ `maxDepth` only, NULL for nodes whose chain
+    *    enters a cycle.
+    */
+  final class Hierarchy private (
+      ids: Array[String], parents: Array[String], up: Array[Int],
+      index: Map[String, Int], maxDepth: Int) extends Serializable {
+
+    /** Self first, then ancestors by distance; NULL for an unknown id. */
+    def ancestors(id: String): Array[String] = index.get(id) match {
+      case None => null
+      case Some(i) =>
+        val out = scala.collection.mutable.ArrayBuffer(ids(i))
+        var cur = i
+        var steps = 0
+        while (cur >= 0 && steps < maxDepth && parents(cur) != null) {
+          val p = up(cur)
+          // ids are unique, so a present parent already in `out` closed
+          // a cycle: every later ancestor is in `out` too
+          if (p >= 0 && out.contains(ids(p))) cur = -1
+          else {
+            out += parents(cur)
+            cur = p
+            steps += 1
+          }
+        }
+        out.toArray
+    }
+
+    /** The root (NULL-parent ancestor) within `maxDepth`, or NULL — a
+      * chain ending in a missing parent or a cycle has none. */
+    def root(id: String): String = index.get(id) match {
+      case None => null
+      case Some(i) =>
+        var cur = i
+        var steps = 0
+        while (parents(cur) != null && up(cur) >= 0 && steps < maxDepth) {
+          cur = up(cur)
+          steps += 1
+        }
+        if (parents(cur) == null) ids(cur) else null
+    }
+
+    /** Root-first name paths aligned with the rows (`names(i)` is row
+      * `i`'s name). Memoized: each row is walked once, and a chain stops
+      * at the first row already resolved.
+      */
+    def paths(names: Array[String]): Array[Array[String]] = {
+      // distance to the path's root; -2 unvisited, -3 on the chain being
+      // walked, -1 never reaches a root (the chain enters a cycle)
+      val dist = Array.fill(ids.length)(-2)
+      val out = new Array[Array[String]](ids.length)
+      val chain = scala.collection.mutable.ArrayBuffer.empty[Int]
+      for (i <- ids.indices if dist(i) == -2) {
+        chain.clear()
+        var cur = i
+        while (cur >= 0 && dist(cur) == -2) {
+          dist(cur) = -3
+          chain += cur
+          cur = up(cur)
+        }
+        if (cur >= 0 && dist(cur) < 0) chain.foreach(dist(_) = -1)
+        else {
+          var d = if (cur < 0) -1 else dist(cur)
+          var above = if (cur < 0) Array.empty[String] else out(cur)
+          for (k <- chain.reverseIterator) {
+            d += 1
+            dist(k) = d
+            if (d < maxDepth) {
+              above = above :+ names(k)
+              out(k) = above
+            }
+          }
+        }
+      }
+      ids.indices.foreach(i => if (ids(i) == null) out(i) = null)
+      out
+    }
+
+    /** [[ancestors]] as a column lookup on the executors: the hierarchy
+      * ships once as a broadcast variable (O(rows) pointers — KB at
+      * dimension size, never a closure-sized pair table), so no closure
+      * join is planned. */
+    def ancestorsOf(spark: SparkSession): Column => Column = {
+      val bc = spark.sparkContext.broadcast(this)
+      val f = udf((id: String) => bc.value.ancestors(id))
+      c => f(c)
+    }
+
+    /** [[root]] as a column lookup, shipped like [[ancestorsOf]]. */
+    def rootOf(spark: SparkSession): Column => Column = {
+      val bc = spark.sparkContext.broadcast(this)
+      val f = udf((id: String) => bc.value.root(id))
+      c => f(c)
+    }
+  }
+
+  object Hierarchy {
+
+    /** Resolve parallel id/parent arrays; None when two rows share an id
+      * (the distributed operators' duplicate-id semantics are theirs to
+      * keep).
+      */
+    def resolve(ids: Array[String], parents: Array[String],
+        maxDepth: Int): Option[Hierarchy] = {
+      val index = scala.collection.mutable.HashMap.empty[String, Int]
+      val unique = ids.indices.forall { i =>
+        ids(i) == null || index.put(ids(i), i).isEmpty
+      }
+      if (!unique) None
+      else Some(new Hierarchy(ids, parents,
+        parents.map(p => if (p == null) -1 else index.getOrElse(p, -1)),
+        index.toMap, maxDepth))
+    }
+  }
+
+  /** The local-solve dispatch every hierarchy consumer goes through.
+    * Returns the frame the consumer should read — `nodes` itself when it
+    * is a local relation, else `nodes` materialized once (it has several
+    * consumers: the walk, and the caller's own joins) — and, when that
+    * frame fits [[Joins.fitsLocalSolve]] and has unique string ids, its
+    * rows with the resolved hierarchy. A local relation (rows parsed on
+    * the driver) is counted and collected without a job; any other frame
+    * pays one forcing job, whose count feeds the gate, plus a collect of
+    * the materialized blocks. None means: run the distributed operator
+    * over the returned frame.
+    */
+  def resolve(nodes: DataFrame, idCol: String, parentCol: String,
+      maxDepth: Int = 32): (DataFrame, Option[(Array[Row], Hierarchy)]) = {
+    val (dim, n) = nodes.queryExecution.optimizedPlan match {
+      case local: LocalRelation => (nodes, local.data.length.toLong)
+      case _ => Materialize.checkpointCounted(nodes)
+    }
+    val (id, parent) =
+      (nodes.schema.fieldIndex(idCol), nodes.schema.fieldIndex(parentCol))
+    val fits = Seq(id, parent).forall(nodes.schema(_).dataType == StringType) &&
+      Joins.fitsLocalSolve(nodes.sparkSession, n, Joins.staticRowBytes(nodes))
+    (dim, Option.when(fits)(dim.collect()).flatMap(rows =>
+      Hierarchy.resolve(rows.map(_.getString(id)),
+        rows.map(_.getString(parent)), maxDepth).map(h => (rows, h))))
+  }
+
+  /** [[breadcrumbs]] through [[resolve]]: same output columns (id first,
+    * the other input columns, `path`, `breadcrumb`), built on the driver
+    * below the gate as a local relation — no join, and no job when the
+    * input was local — and the level walker above it.
+    */
+  def breadcrumbsResolved(
+      nodes: DataFrame,
+      idCol: String,
+      parentCol: String,
+      nameCol: String,
+      maxDepth: Int = 32): DataFrame =
+    if (nodes.schema(nameCol).dataType != StringType)
+      breadcrumbs(nodes, idCol, parentCol, nameCol, maxDepth)
+    else resolve(nodes, idCol, parentCol, maxDepth) match {
+      case (dim, None) => breadcrumbs(dim, idCol, parentCol, nameCol, maxDepth)
+      case (dim, Some((rows, h))) =>
+        val fields = dim.schema.fields
+        val id = dim.schema.fieldIndex(idCol)
+        val rest = fields.indices.filter(_ != id)
+        val name = dim.schema.fieldIndex(nameCol)
+        val paths = h.paths(rows.map(_.getString(name)))
+        val out = rows.indices.map { i =>
+          val p = paths(i)
+          Row.fromSeq(rows(i).get(id) +: rest.map(rows(i).get) :+
+            (if (p == null) null else p.toSeq) :+
+            (if (p == null) null else p.filter(_ != null).mkString(" / ")))
+        }
+        dim.sparkSession.createDataFrame(out.asJava, StructType(
+          fields(id) +: rest.map(fields(_)) :+
+            StructField("path", ArrayType(StringType)) :+
+            StructField("breadcrumb", StringType)))
+    }
 
   /** Transitive closure of a parent-pointer forest.
     *

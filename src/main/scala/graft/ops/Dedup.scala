@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Materialize
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline.
@@ -1048,7 +1048,7 @@ object Dedup {
     })
     val (qck, nQ) = Materialize.checkpointCounted(quotient)
     val bcMerged =
-      if (integralIds && fitsLocalSolve(
+      if (integralIds && Joins.fitsLocalSolve(
           newEdges.sparkSession, nQ, Joins.staticRowBytes(quotient))) {
         val comp = localMinComponents(qck.collect().map(r =>
           (r.get(0).asInstanceOf[Number].longValue(),
@@ -1080,25 +1080,6 @@ object Dedup {
       .select(col("component").as("c")).distinct()
     (bcMerged, newRows, storeComps)
   }
-
-  /** Runtime conf key: max estimated BYTES the driver-side union-find
-    * fast paths will still collect (default 64 MB — a quarter of the
-    * broadcast byte gate). The broadcast gate models Tungsten broadcast
-    * cost; collect() materializes boxed GenericRows plus a mutable
-    * HashMap of up to 2M Long entries, several times the estimate on the
-    * driver heap, so the collect path carries its own tighter cap.
-    */
-  val LocalSolveMaxBytesKey = "spark.graft.cc.localMaxBytes"
-
-  /** The driver-side union-find dispatch gate: the broadcast gates (the
-    * same data would be collected for a broadcast anyway) AND the
-    * dedicated local-solve byte cap above.
-    */
-  private def fitsLocalSolve(
-      spark: SparkSession, rows: Long, rowBytes: Long): Boolean =
-    Joins.fitsBroadcast(spark, rows, rowBytes) &&
-      rows * rowBytes <= spark.conf
-        .get(LocalSolveMaxBytesKey, (64L * 1024 * 1024).toString).toLong
 
   /** Driver-side connected components over an edge list with MIN-id
     * representatives — the local twin of [[connectedComponentsStar]] for
@@ -1334,7 +1315,7 @@ object Dedup {
            org.apache.spark.sql.types.ByteType => true
       case _ => false
     })
-    if (integralIds && fitsLocalSolve(
+    if (integralIds && Joins.fitsLocalSolve(
         pairs.sparkSession, nEdges, Joins.staticRowBytes(edges))) {
       val comp = localMinComponents(edges.collect().map(r =>
         (r.get(0).asInstanceOf[Number].longValue(),

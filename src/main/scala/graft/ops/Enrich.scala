@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * primary group with breadcrumb + per-level columns, empty-string defaults
   * (NOT nulls — `dlt_fetch_timecamp.py:377-381`).
   *
-  * Scale notes: groups/users are dimensions; every join here is a broadcast
-  * of the small lookup side, so enriching a 100 TB fact stream stays a
-  * map-side operation.
+  * Scale notes: groups/users are dimensions; the group hierarchy resolves
+  * on the driver below the local-solve gate ([[Closure.breadcrumbsResolved]]),
+  * and every join here is a broadcast of the small lookup side, so
+  * enriching a 100 TB fact stream stays a map-side operation.
   */
 object Enrich {
 
@@ -24,7 +25,7 @@ object Enrich {
       groups: DataFrame, idCol: String, parentCol: String, nameCol: String,
       levels: Int = 5): DataFrame = {
     val crumbs = Closure
-      .breadcrumbs(groups, idCol, parentCol, nameCol)
+      .breadcrumbsResolved(groups, idCol, parentCol, nameCol)
       .select(col(idCol).as("_g_id"), col(nameCol).as("_g_name"),
         col("breadcrumb").as("_g_breadcrumb"), col("path"))
     val withCols = Closure.withLevelColumns(crumbs, "group", levels)

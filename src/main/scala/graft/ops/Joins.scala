@@ -73,6 +73,27 @@ object Joins {
     rows <= maxRows && rows * rowBytes <= maxBytes
   }
 
+  /** Runtime conf key: max estimated BYTES the driver-side local solves
+    * (the CC union-find, the hierarchy resolver) will still collect
+    * (default 64 MB — a quarter of the broadcast byte gate). The
+    * broadcast gate models Tungsten broadcast cost; collect()
+    * materializes boxed GenericRows plus the solver's own maps, several
+    * times the estimate on the driver heap, so the collect path carries
+    * its own tighter cap.
+    */
+  val LocalSolveMaxBytesKey = "spark.graft.cc.localMaxBytes"
+
+  /** The one driver-side local-solve dispatch gate: the broadcast gates
+    * (the same data would be collected for a broadcast anyway) AND the
+    * dedicated local-solve byte cap above.
+    */
+  def fitsLocalSolve(
+      spark: org.apache.spark.sql.SparkSession, rows: Long,
+      rowBytes: Long): Boolean =
+    fitsBroadcast(spark, rows, rowBytes) &&
+      rows * rowBytes <= spark.conf
+        .get(LocalSolveMaxBytesKey, (64L * 1024 * 1024).toString).toLong
+
   /** Static per-row byte estimate for a frame of FIXED-WIDTH-ish
     * columns (ids, labels, digests — never text/array payloads), for
     * [[fitsBroadcast]] dispatch without a sampling job: schema

@@ -12,15 +12,26 @@ import org.apache.spark.sql.functions._
   * tasks → transitive closure → entries ⋈ closure → SUM per ancestor →
   * tasks ⟕ rollup → budget filter → presentation projection → sort.
   *
-  * Scale notes: the fact side is pre-aggregated per task BEFORE the
-  * closure join (eager aggregation, Yan & Larson VLDB'95 — SUM is
+  * Scale notes: the fact side is pre-aggregated per task BEFORE it meets
+  * the hierarchy (eager aggregation, Yan & Larson VLDB'95 — SUM is
   * decomposable, so SUM-per-ancestor = SUM over SUM-per-task): the
-  * 100 TB side is scanned exactly once, collapses to ≤|tasks| partial
-  * rows via map-side combine, and the closure join touches only those
-  * partials — never the raw fact rows. The closure side broadcasts only
-  * while it is actually broadcast-sized ([[graft.ops.Joins.broadcastIfSmall]]);
-  * two decades up a 15M-pair closure falls to a shuffle join of two
-  * dimension-sized frames instead of a ~1 GB forced broadcast.
+  * 100 TB side is scanned exactly once and collapses to ≤|tasks| partial
+  * rows via map-side combine. The task dimension is materialized once
+  * and [[graft.ops.Closure.resolve]] picks the hierarchy route:
+  *
+  *  - Below the local-solve gate ([[graft.ops.Joins.fitsLocalSolve]])
+  *    the hierarchy is resolved on the driver and each partial row is
+  *    fanned out to its ancestors by a broadcast-variable lookup — no
+  *    closure table, no closure join, and a job count independent of the
+  *    tree's depth. The closure has set semantics here, so a parent
+  *    cycle counts each member's seconds once per ancestor.
+  *  - Above it the recursive-CTE closure runs: same UNION ALL shape as
+  *    the published report's own CTE (SAMPLE-REPORTS.md:59-75), one
+  *    `UnionLoop` iteration per level, joined broadcast only while it is
+  *    broadcast-sized ([[graft.ops.Joins.broadcastIfSmall]]). Like the
+  *    published report it ASSUMES A FOREST: on a parent cycle UNION ALL
+  *    emits each pair once per winding up to the depth cap, multiplying
+  *    the cycle members' tracked seconds.
   */
 object BudgetReport {
 
@@ -28,42 +39,31 @@ object BudgetReport {
     *                 name: String, budgeted: Long seconds)
     * @param entries (task_id: String, duration: Long seconds)
     */
-  def apply(tasks: DataFrame, entries: DataFrame): DataFrame =
-    apply(tasks, entries, doublingClosure = false)
-
-  /** `doublingClosure` swaps the closure derivation for the O(log depth)
-    * doubling variant — the ClosureGradedAB `budget` case times both
-    * INSIDE the full report at any SF to keep the shipped choice a
-    * measured one (round-8 finding: variant A/Bs outside the graded
-    * context mislead; sf1 numbers in SCALE.md round 14).
-    */
-  def apply(tasks: DataFrame, entries: DataFrame,
-      doublingClosure: Boolean): DataFrame = {
-    // Recursive-CTE closure: same UNION ALL shape as the published report's
-    // own recursive CTE (SAMPLE-REPORTS.md:59-75) — both assume a forest.
-    // Materialized once before the broadcast: the UnionLoop otherwise
-    // re-runs inside the broadcast-exchange computation, and the
-    // dimension-sized result (|tasks| × depth) is checkpoint-cheap
-    // (measured ~0.4s off the report at sf0.1).
-    // counted checkpoint: the count IS the forcing job, and it feeds the
-    // broadcastIfSmall dispatch below (the retired eager-checkpoint +
-    // uncounted broadcastIfSmall shape paid a separate count job)
-    val (closure, nClosure) = Materialize.checkpointCounted(
-      if (doublingClosure)
-        Closure.transitiveClosureDoubling(tasks, "task_id", "parent_id")
-          .select(col("descendant_id"), col("ancestor_id"))
-      else
-        Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id"))
-    // Eager aggregation below the join: 60M fact rows → ≤|tasks| partials
-    // (the shuffle carries map-side-combined partial sums, not raw rows).
+  def apply(tasks: DataFrame, entries: DataFrame): DataFrame = {
+    val (dim, resolved) = Closure.resolve(tasks, "task_id", "parent_id")
+    // Eager aggregation below the fan-out: 60M fact rows → ≤|tasks|
+    // partials (the shuffle carries map-side-combined partial sums).
     val perTask = entries
       .groupBy(col("task_id").as("descendant_id"))
       .agg(sum("duration").as("_partial"))
-    val tracked = perTask
-      .join(Joins.broadcastIfSmall(closure, Some(nClosure)), Seq("descendant_id"))
+    val perAncestor = resolved match {
+      case Some((_, h)) =>
+        val ancestorsOf = h.ancestorsOf(tasks.sparkSession)
+        perTask.select(explode(ancestorsOf(col("descendant_id")))
+          .as("ancestor_id"), col("_partial"))
+      case None =>
+        // counted checkpoint: the count IS the forcing job (the UnionLoop
+        // would otherwise re-run inside the broadcast exchange), and it
+        // feeds the broadcastIfSmall dispatch
+        val (closure, nClosure) = Materialize.checkpointCounted(
+          Closure.transitiveClosureRecursive(dim, "task_id", "parent_id"))
+        perTask.join(Joins.broadcastIfSmall(closure, Some(nClosure)),
+          Seq("descendant_id"))
+    }
+    val tracked = perAncestor
       .groupBy(col("ancestor_id").as("task_id"))
       .agg(sum("_partial").as("tracked_seconds"))
-    tasks
+    dim
       .join(tracked, Seq("task_id"), "left")
       .where(col("budgeted") > 0)
       .select(

@@ -10,45 +10,61 @@ import org.apache.spark.sql.functions._
   * A "project" is a root task; every entry rolls up to its root; budget is
   * the SUM of budgets in the project subtree.
   *
-  * Same scale shape as BudgetReport: dimension-side recursion, fact side
-  * pre-aggregated per task below the member join (eager aggregation —
-  * SUM decomposes), and the member table broadcast only while it is
-  * actually broadcast-sized ([[graft.ops.Joins.broadcastIfSmall]]).
+  * Same scale shape as BudgetReport: the task dimension is materialized
+  * once, the fact side is pre-aggregated per task before it meets the
+  * hierarchy (eager aggregation — SUM decomposes), and
+  * [[graft.ops.Closure.resolve]] picks the route:
+  *
+  *  - Below the local-solve gate ([[graft.ops.Joins.fitsLocalSolve]])
+  *    each task's project is a broadcast-variable lookup into the
+  *    driver-resolved hierarchy — no closure, no member table, no
+  *    per-level job.
+  *  - Above it the recursive-CTE closure joins the roots into a member
+  *    table (descendant → project), materialized once for its two
+  *    consumers and broadcast only while it is broadcast-sized
+  *    ([[graft.ops.Joins.broadcastIfSmall]]). This route assumes a
+  *    forest, like the published report; cycle members reach no root on
+  *    either route, so a cycle cannot inflate this report.
   */
 object ProjectBudgetReport {
 
   def apply(tasks: DataFrame, entries: DataFrame): DataFrame = {
-    // The recursion has exactly ONE consumer (the memberOf derivation,
-    // itself materialized below), so it needs no checkpoint of its own:
-    // the UnionLoop executes once, inside memberOf's forcing job. (The
-    // retired eager checkpoint here was one extra action per report.)
-    val closure = Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id")
-    val roots = tasks.where(col("parent_id").isNull)
+    val (dim, resolved) = Closure.resolve(tasks, "task_id", "parent_id")
+    val roots = dim.where(col("parent_id").isNull)
       .select(col("task_id").as("project_id"), col("name").as("project_name"))
-    // descendant → its root ancestor; materialized once — it feeds two
-    // joins (budget + tracked), which would otherwise re-execute the
-    // recursion per consumer. Dimension-sized, so the checkpoint is
-    // cheap; COUNTED, because the count IS the forcing job and feeds the
-    // broadcast dispatch (eager checkpoint + a count job was two).
-    val (memberOf, nMember) = Materialize.checkpointCounted(closure
-      .join(roots, closure("ancestor_id") === roots("project_id"))
-      .select(col("descendant_id"), col("project_id"), col("project_name")))
-    val member = Joins.broadcastIfSmall(memberOf, Some(nMember))
-    val budget = tasks
-      .join(member, tasks("task_id") === col("descendant_id"))
-      .groupBy("project_id")
-      .agg(sum("budgeted").as("budget_seconds"))
-    // Eager aggregation below the join: fact rows collapse to ≤|tasks|
-    // map-side-combined partials before they ever meet the member table.
+    // Eager aggregation: fact rows collapse to ≤|tasks| map-side-combined
+    // partials before they ever meet the hierarchy.
     val perTask = entries
       .groupBy(col("task_id").as("descendant_id"))
       .agg(sum("duration").as("_partial"))
-    val tracked = perTask
-      .join(member, Seq("descendant_id"))
-      .groupBy(col("project_id"), col("project_name"))
-      .agg(sum("_partial").as("cumulative_seconds"))
+    val (budget, tracked) = resolved match {
+      case Some((_, h)) =>
+        val projectOf = h.rootOf(tasks.sparkSession)
+        (dim.groupBy(projectOf(col("task_id")).as("project_id"))
+          .agg(sum("budgeted").as("budget_seconds")),
+         perTask.groupBy(projectOf(col("descendant_id")).as("project_id"))
+          .agg(sum("_partial").as("cumulative_seconds")))
+      case None =>
+        val closure =
+          Closure.transitiveClosureRecursive(dim, "task_id", "parent_id")
+        // descendant → its root ancestor; materialized once for its two
+        // consumers (budget + tracked). COUNTED: the count IS the forcing
+        // job and feeds the broadcast dispatch.
+        val (memberOf, nMember) = Materialize.checkpointCounted(closure
+          .join(roots, closure("ancestor_id") === roots("project_id"))
+          .select(col("descendant_id"), col("project_id"),
+            col("project_name")))
+        val member = Joins.broadcastIfSmall(memberOf, Some(nMember))
+        (dim.join(member, dim("task_id") === col("descendant_id"))
+          .groupBy("project_id")
+          .agg(sum("budgeted").as("budget_seconds")),
+         perTask.join(member, Seq("descendant_id"))
+          .groupBy(col("project_id"), col("project_name"))
+          .agg(sum("_partial").as("cumulative_seconds"))
+          .drop("project_name"))
+    }
     roots
-      .join(tracked.drop("project_name"), Seq("project_id"), "left")
+      .join(tracked, Seq("project_id"), "left")
       .join(budget, Seq("project_id"), "left")
       .select(
         col("project_id"), col("project_name"),

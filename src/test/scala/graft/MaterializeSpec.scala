@@ -35,30 +35,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("checkpointCounted: ONE job total (the count IS the forcing " +
     "action), correct count, lineage truncated — in all three modes") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    def jobsOf(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        jobs.set(0)
-        body
-        // flush the async bus: poll until the count is stable for 500 ms
-        var last = -1
-        var stableSince = System.nanoTime()
-        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-        while (System.nanoTime() < deadline &&
-            (jobs.get() != last ||
-              System.nanoTime() - stableSince < 500L * 1000 * 1000)) {
-          if (jobs.get() != last) { last = jobs.get(); stableSince = System.nanoTime() }
-          Thread.sleep(50)
-        }
-        jobs.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
-    }
+    def jobsOf(body: => Unit): Int = jobsDuring(body)._2
     // local (default): lazy localCheckpoint forced by the count — 1 job,
     // where the eager checkpoint + a separate dispatch count() paid 2
     withMode(None) {

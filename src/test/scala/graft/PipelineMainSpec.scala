@@ -73,6 +73,26 @@ class PipelineMainSpec extends SparkSpec {
     assert(cats("1002") === "Developer Tools")
   }
 
+  test("buildTasks/buildUsers resolve their hierarchies on the driver: a " +
+    "12-deep task tree launches no job before the sink") {
+    val deep: sources.TimeCampClient.Transport = (url, params) => url match {
+      case "/tasks" => sources.TimeCampClient.Response(200, (1 to 12).map { i =>
+        val parent = if (i == 1) "0" else s"t${i - 1}"
+        s""""t$i": {"task_id": "t$i", "parent_id": "$parent", "name": "L$i"}"""
+      }.mkString("{", ",", "}"))
+      case _ => PipelineMain.stubTransport(url, params)
+    }
+    val (tasks, taskJobs) = jobsDuring(PipelineMain.buildTasks(spark, deep))
+    val (users, userJobs) = jobsDuring(PipelineMain.buildUsers(spark, deep))
+    assert(taskJobs === 0 && userJobs === 0)
+    val leaf = tasks.where(col("task_id") === "t12")
+      .select("breadcrumb", "task_level_8").head()
+    assert(leaf.getString(0) === (1 to 12).map(i => s"L$i").mkString(" / "))
+    assert(leaf.getString(1) === "L8")
+    assert(users.where(col("user_id") === "1").select("group_breadcrumb")
+      .as[String].head() === "Org / Eng")
+  }
+
   test("TimeCampConfig.fromEnv: reference defaults and env precedence") {
     import graft.sources.TimeCampConfig
     val missing = java.nio.file.Paths.get("/nonexistent/.env")

@@ -292,41 +292,22 @@ class PlanSpec extends SparkSpec {
     // (`broadcastIfSmall(df, Some(df.count()))`) added one count job per
     // hinted frame and a sampling collect on top — ~10 extra jobs, well
     // past the headroom below.
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobGroups.add(Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, foldJobs) = jobsDuring(
       ops.Curation.curateIncremental(
         b, ws, "doc_id", "text", "source",
         ops.Curation.CurationStores.empty(spark, "source"),
-        metricsTag = "curinc_jobs")
-      // listener delivery is async but FIFO: run a group-tagged sentinel
-      // action and wait until IT arrives — every fold job precedes it
-      spark.sparkContext.setJobGroup("curinc_jobs_sentinel", "sentinel")
-      try spark.range(1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobGroups.toArray.exists(_ == "curinc_jobs_sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-      val foldJobs = jobGroups.toArray
-        .takeWhile(_ != "curinc_jobs_sentinel").length
-      // measured 117 at sf0.001 under AQE (each exchange/broadcast stage
-      // is its own job); the retired dispatch added ~16 (one count + one
-      // sampling collect per hinted frame, 8 frames) — the bound sits
-      // between the two. A legitimate plan change that crosses it should
-      // re-baseline CONSCIOUSLY, with this arithmetic in hand.
-      val bound = 126
-      assert(foldJobs <= bound,
-        s"one curateIncremental fold launched $foldJobs jobs (> $bound): " +
-          "a per-frame count/sampling probe crept back into the " +
-          "broadcast dispatch")
-      assert(foldJobs > 0, "listener saw no fold jobs — harness broken")
-    } finally spark.sparkContext.removeSparkListener(listener)
+        metricsTag = "curinc_jobs"))
+    // measured 117 at sf0.001 under AQE (each exchange/broadcast stage
+    // is its own job); the retired dispatch added ~16 (one count + one
+    // sampling collect per hinted frame, 8 frames) — the bound sits
+    // between the two. A legitimate plan change that crosses it should
+    // re-baseline CONSCIOUSLY, with this arithmetic in hand.
+    val bound = 126
+    assert(foldJobs <= bound,
+      s"one curateIncremental fold launched $foldJobs jobs (> $bound): " +
+        "a per-frame count/sampling probe crept back into the " +
+        "broadcast dispatch")
+    assert(foldJobs > 0, "listener saw no fold jobs — harness broken")
   }
 
   test("scoreRank keeps the window's rank contract on the edges: NaN " +
@@ -348,22 +329,63 @@ class PlanSpec extends SparkSpec {
     assert(got(0)._3.isNaN && got(1)._3.isNaN && got(2)._3 === 0.9)
   }
 
-  test("budget report: fact side scanned once and joined broadcast") {
+  test("budget report: fact side scanned once and shuffled only as " +
+    "partial aggregates") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
     val report = reports.BudgetReport(
       reports.TaskTree.tasks(spark, dir), reports.TaskTree.entries(spark, dir))
     val plan = planOf(report)
     // the 100 TB side (entries = lineitem here) must appear in exactly ONE
-    // scan — the closure/rollup must never trigger a second pass or a
-    // re-shuffle of the fact table
+    // scan — the rollup must never trigger a second pass over the facts
     val factScans = plan.linesIterator
       .count(l => l.contains("Scan parquet") && l.contains("lineitem"))
     assert(factScans === 1, s"expected 1 lineitem scan, got $factScans in:\n$plan")
-    // at this SF the closure is dimension-sized, so broadcastIfSmall must
-    // still dispatch to a broadcast join
-    assert(plan.contains("BroadcastHashJoin"),
-      s"closure must broadcast against the fact side:\n$plan")
     // partial aggregation runs map-side before the only fact shuffle
     assert(plan.contains("HashAggregate"), s"expected hash agg in:\n$plan")
+    // no Exchange over the fact scan except the partial-aggregate
+    // shuffle: raw fact rows cross no exchange (every exchange above the
+    // scan moves aggregated rows), and the first one above it is the
+    // shuffle of map-side partial sums. The hierarchy reaches the
+    // executors as a broadcast variable, so no closure table is joined.
+    val physical = report.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def isFactScan(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.toString.contains("lineitem"))
+      case _ => false
+    }
+    // a fact scan below `p` with no aggregate in between
+    def rawFact(p: SparkPlan): Boolean = p match {
+      case _: HashAggregateExec => false
+      case o => isFactScan(o) || o.children.exists(rawFact)
+    }
+    def partialAggBelow(p: SparkPlan): Boolean = p match {
+      case h: HashAggregateExec => h.aggregateExpressions.forall(_.mode == Partial)
+      case _: Exchange => false
+      case o => o.children.size == 1 && partialAggBelow(o.children.head)
+    }
+    val factExchanges = physical.collect {
+      case e: Exchange if e.exists(isFactScan) => e
+    }
+    factExchanges.foreach(e =>
+      assert(!rawFact(e.child), s"raw fact rows cross an exchange:\n$e"))
+    val first = factExchanges.filter(e => !e.child.exists {
+      case inner: Exchange => inner.exists(isFactScan)
+      case _ => false
+    })
+    assert(first.nonEmpty, s"no fact shuffle found in:\n$physical")
+    first.foreach {
+      case s: ShuffleExchangeExec =>
+        assert(partialAggBelow(s.child),
+          s"the first fact shuffle is not over a partial aggregate:\n$s")
+      case e => fail(s"the fact side is broadcast:\n$e")
+    }
   }
 
   test("broadcastIfSmall: hint only while the dim is broadcast-sized") {

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fixture trees per FIXTURES.md §2: ≥3 levels, a cycle pair, an orphan,
@@ -20,6 +21,15 @@ class ClosureSpec extends SparkSpec {
     ("7", "8", "cycA"),          // 7 <-> 8 cycle
     ("8", "7", "cycB")
   ).toDF("task_id", "parent_id", "name")
+
+  /** The driver resolver's closure as sorted (descendant, ancestor) pairs. */
+  private def resolvedClosure(nodes: DataFrame, maxDepth: Int)
+      : Seq[(String, String)] = {
+    val (rows, h) = Closure.resolve(nodes, "task_id", "parent_id", maxDepth)
+      ._2.getOrElse(fail("the resolver route was not taken"))
+    rows.toSeq.map(_.getString(0))
+      .flatMap(d => h.ancestors(d).map(d -> _)).sorted
+  }
 
   test("transitive closure contains all self-pairs (base case)") {
     val c = Closure.transitiveClosure(tree, "task_id", "parent_id")
@@ -155,7 +165,7 @@ class ClosureSpec extends SparkSpec {
     assert(bc === (1 to 11).map(i => s"n$i").mkString(" / "))
   }
 
-  test("depth-cap boundary is unified: all three closure variants agree " +
+  test("depth-cap boundary is unified: all four closure variants agree " +
     "at exactly maxDepth and maxDepth+1") {
     val chain = (1 to 8).map(i =>
       (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
@@ -169,12 +179,14 @@ class ClosureSpec extends SparkSpec {
         maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
       assert(iter == dbl, s"iterative vs doubling at cap $cap")
       assert(iter == rec, s"iterative vs recursive at cap $cap")
+      assert(iter.map(r => (r.getString(0), r.getString(1))) ==
+        resolvedClosure(chain, cap), s"iterative vs resolver at cap $cap")
       // distance ≤ cap exactly: node 8 sees itself + cap ancestors
       assert(iter.count(_.getString(0) == "8") == cap + 1)
     }
   }
 
-  test("depth-cap boundary is unified: all three breadcrumb variants agree " +
+  test("depth-cap boundary is unified: all four breadcrumb variants agree " +
     "at exactly maxDepth and maxDepth+1") {
     val chain = (1 to 8).map(i =>
       (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
@@ -189,8 +201,12 @@ class ClosureSpec extends SparkSpec {
       val dbl = Closure.breadcrumbsDoubling(chain, "task_id", "parent_id",
         "name", maxDepth = cap).select("task_id", "breadcrumb")
         .orderBy("task_id").collect().toSeq
+      val res = Closure.breadcrumbsResolved(chain, "task_id", "parent_id",
+        "name", maxDepth = cap).select("task_id", "breadcrumb")
+        .orderBy("task_id").collect().toSeq
       assert(iter == rec, s"walker vs recursive at cap $cap")
       assert(iter == dbl, s"walker vs doubling at cap $cap")
+      assert(iter == res, s"walker vs resolver at cap $cap")
       // levels ≤ cap have paths; deeper nodes NULL
       assert(iter.count(!_.isNullAt(1)) == cap)
     }

@@ -72,6 +72,47 @@ object ClosureProps extends Properties("graft") {
       it == rec
     }
 
+  /** Random parent-pointer GRAPH: a node's parent is any node (cycles and
+    * self-loops likely), an id missing from the table (orphans), or none. */
+  private val parentGraphGen: Gen[Map[Long, Option[Long]]] = for {
+    n <- Gen.choose(1, 25)
+    parents <- Gen.listOfN(n, Gen.option(Gen.choose(0L, n + 2L)))
+  } yield parents.zipWithIndex.map { case (p, i) => i.toLong -> p }.toMap
+
+  private def parentFrame(g: Map[Long, Option[Long]]) = g.toSeq
+    .map { case (id, p) => (id.toString, p.map(_.toString).orNull, s"n$id") }
+    .toDF("id", "parent", "name")
+
+  property("driver resolver = transitiveClosure as a set on random forests " +
+    "and cyclic graphs with orphans") =
+    forAll(forestGen, parentGraphGen) { (forest, graph) =>
+      Seq(forest, graph).forall { g =>
+        val df = parentFrame(g)
+        val want = Closure.transitiveClosure(df, "id", "parent")
+          .as[(String, String)].collect().toSet
+        Closure.resolve(df, "id", "parent")._2.exists { case (rows, h) =>
+          rows.flatMap { r =>
+            h.ancestors(r.getString(0)).map(r.getString(0) -> _)
+          }.toSet == want
+        }
+      }
+    }
+
+  property("driver-resolved breadcrumbs = Closure.breadcrumbs, incl. " +
+    "orphans and cycles") =
+    forAll(parentGraphGen) { graph =>
+      val df = parentFrame(graph)
+      def rows(out: org.apache.spark.sql.DataFrame) = out.collect().map(r =>
+        (r.getString(0), r.getString(1), r.getString(2),
+          Option(r.getAs[scala.collection.Seq[String]](3)).map(_.toList),
+          Option(r.getString(4)))).toSet
+      val resolved = Closure.breadcrumbsResolved(df, "id", "parent", "name")
+      val walked = Closure.breadcrumbs(df, "id", "parent", "name")
+      Closure.resolve(df, "id", "parent")._2.nonEmpty &&
+        resolved.columns.sameElements(walked.columns) &&
+        rows(resolved) == rows(walked)
+    }
+
   property("breadcrumb path: root-first, self-last, levels = element_at") =
     forAll(forestGen) { forest =>
       val df = forest.toSeq
