@@ -1,9 +1,11 @@
 package graft
 
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,7 +32,9 @@ import graft.sources.{BigQuerySink, FileSink, Sink, TimeCampClient, TimeCampConf
   * breadcrumbs + level columns + users/perms drop; users get settings
   * enrichment + primary-group breadcrumbs; activities fan out per
   * (user, ≤20-date chunk) with skip-and-continue; application_names get
-  * the name-fallback chain + category decode.
+  * the name-fallback chain + category decode. Each dataset's plan executes
+  * once, in the sink; the row count `run` returns is observed during that
+  * write.
   */
 object PipelineMain {
 
@@ -330,13 +334,23 @@ object PipelineMain {
       Seq("user_id"), Seq(col("email")))
   }
 
-  def buildActivities(spark: SparkSession, transport: TimeCampClient.Transport,
-      from: String, to: String, userIds: Seq[String]): DataFrame = {
+  val ActivitySchema: StructType = StructType(Seq(
+    StructField("user_id", StringType), StructField("date", StringType),
+    StructField("application_id", StringType),
+    StructField("duration", LongType)))
+
+  /** Activity rows per (user, ≤20-date chunk), skip-and-continue. They stay
+    * on the driver: the `computer_activities` write reads them as a local
+    * relation and [[applicationIds]] derives its id list from them, so no
+    * job runs before the sink.
+    */
+  def buildActivities(transport: TimeCampClient.Transport,
+      from: String, to: String, userIds: Seq[String]): Seq[Row] = {
     val get = TimeCampClient.get(transport) _
     val dates = Iterator.iterate(java.time.LocalDate.parse(from))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse(to))).map(_.toString).toSeq
     val batches = TimeCampClient.activityBatches(userIds, dates)
-    val rows = TimeCampClient.fetchSkippingFailures(batches) { case (u, chunk) =>
+    TimeCampClient.fetchSkippingFailures(batches) { case (u, chunk) =>
       jsonArray(get("/computer_activities",
         Map("user_id" -> u) ++ chunk.zipWithIndex.map { case (d, i) =>
           s"dates[$i]" -> d
@@ -344,20 +358,21 @@ object PipelineMain {
         .map(n => Row(textOf(n, "user_id"), textOf(n, "date"),
           textOf(n, "application_id"), longOf(n, "duration")))
     }.flatten
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("user_id", StringType), StructField("date", StringType),
-      StructField("application_id", StringType),
-      StructField("duration", LongType))))
   }
 
+  /** The application ids observed in `activityRows` (semi-join-driven
+    * dimension fetch): distinct, without NULL and "0", in Spark's string
+    * order (UTF-8 bytes), so the `/application` batches are the ones an
+    * `orderBy("application_id")` over the activities gives.
+    */
+  def applicationIds(activityRows: Seq[Row]): Seq[String] =
+    activityRows.map(_.getString(ActivitySchema.fieldIndex("application_id")))
+      .filter(id => id != null && id != "0").distinct
+      .sortBy(org.apache.spark.unsafe.types.UTF8String.fromString)
+
   def buildApplicationNames(spark: SparkSession,
-      transport: TimeCampClient.Transport, activities: DataFrame): DataFrame = {
+      transport: TimeCampClient.Transport, ids: Seq[String]): DataFrame = {
     val get = TimeCampClient.get(transport) _
-    // semi-join-driven dimension fetch: only ids observed in activities
-    val ids = activities.select("application_id")
-      .where(col("application_id").isNotNull && col("application_id") =!= "0")
-      .distinct().orderBy("application_id")
-      .collect().map(_.getString(0)).toSeq
     val rows = TimeCampClient.batched(ids, 100).flatMap { chunk =>
       jsonArray(get("/application",
         Map("application_ids" -> chunk.mkString(","))).body)
@@ -383,8 +398,12 @@ object PipelineMain {
 
   // ----------------------------------------------------------------- run
 
+  /** Fetch, transform and write `c.datasets`; the rows written per dataset.
+    * `rowCountWait` bounds the wait for each write's observed row count.
+    */
   def run(spark: SparkSession, c: Config,
-      sinkOverride: Option[Sink] = None): Map[String, Long] = {
+      sinkOverride: Option[Sink] = None,
+      rowCountWait: FiniteDuration = 2.minutes): Map[String, Long] = {
     val invalid = c.datasets.filterNot(AvailableDatasets.contains)
     if (invalid.nonEmpty)
       throw new IllegalArgumentException(
@@ -430,45 +449,57 @@ object PipelineMain {
     val from = TimeCampClient.parseDateFlexible(c.from).toString
     val to = TimeCampClient.parseDateFlexible(c.to).toString
 
+    // One users build per run, collected once: the rows are dimension-sized
+    // and the REST client parsed them on the driver already. They feed both
+    // the 'users' write (a local relation) and the activity fan-out, which
+    // is the ENABLED user list of the users endpoint (`:440-445`) — a
+    // hardcoded id list would silently drop every other user's activities.
+    // A second build would re-fetch /users, the /user/{ids}/setting batches
+    // and /people_picker from the rate-limited API.
+    lazy val usersPlan = buildUsers(spark, transport)
+    lazy val userRows = usersPlan.collect().toSeq
+    // an id-less user row still lands in 'users'; it has nothing to fetch
+    lazy val activeUserIds = userRows
+      .filter(_.getAs[Boolean]("is_enabled")).map(_.getAs[String]("user_id"))
+      .filter(_ != null).sorted
     // activities are shared between computer_activities and
-    // application_names (the reference preloads them once, `:447-454`),
-    // and their user fan-out is the ENABLED user list derived from the
-    // users endpoint (`:440-445`) — a hardcoded id list would silently
-    // drop every other user's activities on a real transport
-    // one users build per run: the frame feeds both the 'users' dataset
-    // and the enabled-user fan-out — a second buildUsers would re-fetch
-    // /users, the batched /user/{ids}/setting calls, and /people_picker
-    // from the rate-limited API and re-run the whole enrichment chain
-    lazy val usersFrame = buildUsers(spark, transport)
-    lazy val activeUserIds = usersFrame
-      .where(col("is_enabled")).select("user_id")
-      .collect().map(_.getString(0)).toSeq.sorted
-    lazy val activities = buildActivities(spark, transport, from, to,
-      userIds = activeUserIds).cache()
-    val usesActivities = c.datasets
-      .exists(d => d == "computer_activities" || d == "application_names")
+    // application_names (the reference preloads them once, `:447-454`)
+    lazy val activityRows = buildActivities(transport, from, to, activeUserIds)
 
-    val out = c.datasets.map { ds =>
+    c.datasets.map { ds =>
       val df = ds match {
         case "entries" => buildEntries(spark, transport, from, to)
         case "tasks" => buildTasks(spark, transport)
-        case "users" => usersFrame
-        case "computer_activities" => activities
-        case "application_names" =>
-          buildApplicationNames(spark, transport, activities)
+        case "users" => spark.createDataFrame(userRows.asJava, usersPlan.schema)
+        case "computer_activities" =>
+          spark.createDataFrame(activityRows.asJava, ActivitySchema)
+        case "application_names" => buildApplicationNames(spark, transport,
+          applicationIds(activityRows))
       }
-      // cache around write+count: without it the full transform chain
-      // (dedup groupBys, breadcrumb closure, enrichment joins) executes
-      // twice per dataset — once for the write, once for the count
-      val shared = ds == "computer_activities"
-      val work = if (shared) df else df.cache()
-      sink.write(work, c.output, ds, sinkFormat)
-      val n = work.count()
-      if (!shared) work.unpersist()
-      ds -> n
+      // the row count rides the write (the reference's run counter,
+      // `total_entries += len(entries)`, `:470`, `:486`): each dataset's
+      // plan executes once, in the sink
+      val written = Observation(s"rows_$ds")
+      sink.write(df.observe(written, count(lit(1))), c.output, ds, sinkFormat)
+      ds -> rowsWritten(written, ds, rowCountWait)
     }.toMap
-    if (usesActivities) { activities.unpersist(); () }
-    out
+  }
+
+  /** The row count `written` observed while the sink executed the frame.
+    * The listener bus delivers it shortly after the write returns. A sink
+    * that returned without executing the frame delivers none, so the wait
+    * is bounded and ends in an error, never in a second `count()`.
+    */
+  private def rowsWritten(written: Observation, ds: String,
+      wait: FiniteDuration): Long = {
+    val metrics = try Await.result(written.future, wait) catch {
+      case _: java.util.concurrent.TimeoutException => Row.empty
+    }
+    if (metrics.length == 0)
+      throw new IllegalStateException(
+        s"no row count for '$ds' within $wait: the sink returned without " +
+          "executing the frame it was given")
+    metrics.getLong(0)
   }
 
   def main(args: Array[String]): Unit = {

@@ -8,6 +8,12 @@ import org.apache.spark.sql.DataFrame
   * sinks, a `project.dataset` pair for warehouse sinks. `table` is the
   * dataset name (`entries`, `tasks`, ...), `format` the payload format
   * (`csv`/`jsonl`/`parquet` for files, [[BigQuerySink.Format]] for BQ).
+  *
+  * Contract: `write` executes `df` once, through a DataFrame action or
+  * writer, before it returns. The pipeline's row counts ride that
+  * execution (an `Observation` on `df`), so the pipeline runs no second
+  * query per table. A sink that returns without executing `df` (or runs
+  * it only through its RDD) fails the pipeline run after a bounded wait.
   */
 trait Sink {
   def write(df: DataFrame, target: String, table: String, format: String): Unit

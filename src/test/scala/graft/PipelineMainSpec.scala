@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 class PipelineMainSpec extends SparkSpec {
@@ -91,6 +93,127 @@ class PipelineMainSpec extends SparkSpec {
     assert(leaf.getString(1) === "L8")
     assert(users.where(col("user_id") === "1").select("group_breadcrumb")
       .as[String].head() === "Org / Eng")
+  }
+
+  /** `base` with every request recorded as (url, params), registered
+    * under a fresh key; the config to run it and the recorded requests.
+    */
+  private def recording(c: PipelineMain.Config,
+      base: sources.TimeCampClient.Transport = PipelineMain.stubTransport) = {
+    val calls =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, Map[String, String])]()
+    val key = s"recording_${java.util.UUID.randomUUID}"
+    PipelineMain.registerTransport(key, (url, params) => {
+      calls.add(url -> params); base(url, params)
+    })
+    (c.copy(transportKey = key), () => calls.asScala.toSeq)
+  }
+
+  test("a full run executes each dataset's plan once: fewer jobs, and the " +
+    "users endpoints are requested once") {
+    val (c, calls) = recording(cfg(Files.createTempDirectory("pipe").toString,
+      PipelineMain.AvailableDatasets))
+    PipelineMain.run(spark, c) // warm-up: the pinned run is a steady state
+    val before = calls().size
+    val (counts, jobs) = jobsDuring(PipelineMain.run(spark,
+      c.copy(output = Files.createTempDirectory("pipe").toString)))
+    assert(counts.values.forall(_ > 0), counts)
+    // one execution per dataset plus the users collect; a plan run a
+    // second time (a count after the write, a rebuilt users chain) adds jobs
+    assert(jobs <= 14, s"$jobs jobs for one five-dataset run")
+    val perUrl = calls().drop(before).groupBy(_._1).map { case (u, v) => u -> v.size }
+    assert(perUrl("/users") === 1 && perUrl("/people_picker") === 1)
+    assert(perUrl("/user/1,2/setting") === 1)
+  }
+
+  test("/application batches are the sorted distinct activity ids in " +
+    "Spark's string order") {
+    // 250 numeric ids in scrambled order (string order differs from
+    // numeric), repeats, NULL and "0", and two ids whose UTF-8 byte order
+    // differs from their UTF-16 order
+    val ids = (0 until 500).map(i => s"${(i * 37) % 250 + 1}") ++
+      Seq("0", "\uFF21", "\uD83D\uDE00", "\uFF21")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val transport: sources.TimeCampClient.Transport = (url, params) => url match {
+      case "/computer_activities" =>
+        val rows = (ids.map(json.writeValueAsString) :+ "null").map(id =>
+          s"""{"user_id": "${params("user_id")}", "date": "2024-01-01",
+             | "application_id": $id, "duration": 60}""".stripMargin)
+        sources.TimeCampClient.Response(200, rows.mkString("[", ",", "]"))
+      case "/application" =>
+        sources.TimeCampClient.Response(200,
+          params("application_ids").split(",").map(id =>
+            s"""{"application_id": ${json.writeValueAsString(id)}, "full_name": "n",
+               | "category_id": "1"}""".stripMargin).mkString("[", ",", "]"))
+      case _ => PipelineMain.stubTransport(url, params)
+    }
+    val out = Files.createTempDirectory("pipe").toString
+    val (c, calls) = recording(cfg(out,
+      Seq("computer_activities", "application_names"), "parquet"), transport)
+    val counts = PipelineMain.run(spark, c)
+    assert(counts("application_names") === 252)
+    // what an orderBy over the written activities gives, batched by 100
+    val want = graft.sources.FileSink.read(spark, out, "computer_activities",
+        "parquet").select("application_id")
+      .where(col("application_id").isNotNull && col("application_id") =!= "0")
+      .distinct().orderBy("application_id").as[String].collect().toSeq
+    assert(want.takeRight(2) === Seq("\uFF21", "\uD83D\uDE00"))
+    val sent = calls().collect { case ("/application", p) => p("application_ids") }
+    assert(sent === want.grouped(100).map(_.mkString(",")).toSeq)
+    assert(sent.size === 3)
+  }
+
+  test("run's row counts equal the rows on disk for csv, jsonl and parquet") {
+    for (format <- Seq("csv", "jsonl", "parquet")) {
+      val out = Files.createTempDirectory(s"pipe_$format").toString
+      val counts = PipelineMain.run(spark,
+        cfg(out, PipelineMain.AvailableDatasets, format))
+      PipelineMain.AvailableDatasets.foreach { ds =>
+        assert(counts(ds) ===
+          graft.sources.FileSink.read(spark, out, ds, format).count(),
+          s"$ds ($format)")
+      }
+    }
+  }
+
+  test("a sink that returns without executing the frame fails with a clear " +
+    "error after a bounded wait: no hang, no fallback count") {
+    val lazySink = new graft.sources.Sink {
+      override def write(df: org.apache.spark.sql.DataFrame, target: String,
+          table: String, format: String): Unit = ()
+    }
+    val started = System.nanoTime()
+    val (e, jobs) = jobsDuring(intercept[IllegalStateException] {
+      PipelineMain.run(spark,
+        cfg("proj.analytics", Seq("tasks")).copy(sink = "bigquery"),
+        sinkOverride = Some(lazySink),
+        rowCountWait = scala.concurrent.duration.Duration(1, "second"))
+    })
+    assert(e.getMessage.contains("no row count for 'tasks'"), e.getMessage)
+    assert(e.getMessage.contains("without executing"), e.getMessage)
+    assert(jobs === 0, "a fallback count() would launch a job")
+    assert((System.nanoTime() - started) / 1e9 < 30)
+  }
+
+  test("a /users row without user_id lands in users and is not fanned out " +
+    "to /computer_activities") {
+    val transport: sources.TimeCampClient.Transport = (url, params) => url match {
+      case "/users" => sources.TimeCampClient.Response(200,
+        """[{"user_id": "1", "email": "a@example.com", "display_name": "Ann"},
+          |{"email": "c@example.com", "display_name": "NoId"},
+          |{"user_id": "2", "email": "b@example.com", "display_name": "Bob"}]""".stripMargin)
+      case _ => PipelineMain.stubTransport(url, params)
+    }
+    val out = Files.createTempDirectory("pipe").toString
+    val (c, calls) = recording(cfg(out, Seq("users", "computer_activities")),
+      transport)
+    val counts = PipelineMain.run(spark, c)
+    assert(counts === Map("users" -> 3L, "computer_activities" -> 3L))
+    val idLess = graft.sources.FileSink.read(spark, out, "users", "jsonl")
+      .where(col("user_id").isNull)
+    assert(idLess.select("display_name").as[String].collect() === Array("NoId"))
+    val fanOut = calls().collect { case ("/computer_activities", p) => p("user_id") }
+    assert(fanOut === Seq("1"))
   }
 
   test("TimeCampConfig.fromEnv: reference defaults and env precedence") {
