@@ -1,70 +1,20 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Deployment knob, not operator shape: partitions default to the core
     // count (right for the graded SF on this box), but big-SF slope runs
     // size them to the data (SCALE.md's q_multi_join_region note — ~2 GB
     // per shuffle partition at sf10 under 32). A real cluster sets this to
     // cores×(2-3) with AQE coalescing the small stages back down.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SPARK_GRAFT_AQE=false exists only for A/B floor measurements;
-      // the engine's config is AQE ON (skew-join + runtime re-plan are
-      // non-negotiable at real scale).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // NOTE: coalescePartitions.parallelismFirst=false was A/B-measured
-      // here and is ~19% SLOWER on this suite (size-based coalescing
-      // collapses medium shuffles to one partition and serializes their
-      // downstream stages) — keep AQE's parallelism-first default.
-      //
-      // Shuffle WRITER selection: with shuffle.partitions = 32 (≤ the
-      // 200 default bypassMergeThreshold) every SQL exchange falls into
-      // BypassMergeSortShuffleWriter — numPartitions temp files + a
-      // merge + an index per MAP TASK, which ProfileStacks measured as
-      // ~60% of executor thread-time on the exchange-heavy fold rows
-      // (hundreds of tiny exchanges × 32 file creates each). A real
-      // cluster runs thousands of shuffle partitions, always above the
-      // threshold, i.e. on UnsafeShuffleWriter's one-sorted-file path —
-      // threshold 0 makes the bench exercise the SAME writer the
-      // cluster uses (more representative) and drops the per-exchange
-      // file-creation storm (A/B'd, see OPTIMIZATION_r18.md;
-      // SPARK_GRAFT_BYPASS_THRESHOLD=200 restores the Spark default).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // Suite-position A/B knobs (VERDICT r17 #7): the app/SQL status
-      // stores retain per-job/stage/execution records (including plan
-      // descriptions) across all 310 suite executions even with the UI
-      // disabled; these bound that growth. Defaults = Spark defaults, so
-      // an unset run is unchanged; the A/B result is in
-      // OPTIMIZATION_r18.md.
-      .config("spark.sql.ui.retainedExecutions",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_EXECUTIONS", "1000"))
-      .config("spark.ui.retainedJobs",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_JOBS", "1000"))
-      .config("spark.ui.retainedStages",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_STAGES", "1000"))
-      .config("spark.ui.retainedTasks",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_TASKS", "100000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Deployment knobs: run the suite under a different materialization
-    // strategy (e.g. MODE=reliable + DIR=<checkpoint dir>) to measure the
-    // cluster-durability seam's cost against the local default.
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE")
-      .foreach(spark.conf.set(Materialize.ModeKey, _))
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_DIR")
-      .foreach(spark.conf.set(Materialize.DirKey, _))
+    // NOTE: AQE is on (Spark's default); coalescePartitions.
+    // parallelismFirst=false was A/B-measured here and is ~19% SLOWER on
+    // this suite (size-based coalescing collapses medium shuffles to one
+    // partition and serializes their downstream stages) — keep AQE's
+    // parallelism-first default.
+    val spark = GraftSession(shufflePartitions =
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", GraftSession.cpus))
     // A/B regime knobs (VERDICT r17 #4: keep the DISTRIBUTED CC arm
     // measured): maxRows=0 forces every broadcast/local-solve dispatch
     // to its distributed arm, so the star/label-prop loops' at-scale
@@ -74,66 +24,14 @@ object Bench {
       .foreach(spark.conf.set(graft.ops.Joins.MaxBroadcastRowsKey, _))
     sys.env.get("SPARK_GRAFT_CC_LOCALMAX")
       .foreach(spark.conf.set(graft.ops.Joins.LocalSolveMaxBytesKey, _))
-    // Untimed session warmup: JIT, codegen compiler, parquet reader, and
-    // shuffle machinery init otherwise land entirely on the first query.
-    // Touch every table once so per-query timings measure the operator,
-    // not whichever query happens to pay the first footer read + page-cache
-    // fill for its table.
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.names.foreach(t => Tables(spark, sfDir, t).count())
-    Tables(spark, sfDir, "region").groupBy("r_name").count().count()
-    // Warm the shared library JIT paths the suite leans on (regex split,
-    // md5/hash, higher-order array lambdas, window frames, joins, sketches):
-    // generated classes are per-plan, but the UTF8String/regex/hash-agg/
-    // sort machinery under them is common — measured ~3s off whichever
-    // query otherwise pays the first text-path compile at sf0.1. Tiny
-    // in-memory frames: the warmup costs ~2s once, not per query.
-    // Forced through the noop sink, NOT count(): under a bare count()
-    // ColumnPruning deletes every deterministic projection (and
-    // EliminateSorts the sort), so the paths this block exists to warm
-    // would never execute.
-    locally {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      def force(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.mode("overwrite").format("noop").save()
-      val txt = (1 to 64).map(i => (i.toLong, s"warm up the jit $i path a b c"))
-        .toDF("id", "text")
-      force(txt.select(col("id"), explode(split(col("text"), "\\s+")).as("t"))
-        .groupBy("t").agg(count(lit(1))))
-      force(txt.select(md5(col("text").cast("binary")),
-        substring(regexp_replace(col("text"), "[^a-z]", ""), 1, 4),
-        aggregate(transform(split(col("text"), " "), w => length(w)),
-          lit(0), (a, b) => a + b),
-        zip_with(split(col("text"), " "), split(col("text"), " "),
-          (a, b) => concat(a, b))))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(lit(1)).orderBy("id")
-      force(txt.withColumn("r", row_number().over(w)))
-      force(txt.join(broadcast(txt.limit(8).select(col("id").as("id2"))),
-        col("id") === col("id2")))
-      force(txt.select(approx_count_distinct("text"),
-        percentile_approx(col("id"), lit(0.5), lit(100))))
-      force(txt.orderBy(col("text").desc))
-    }
     // SPARK_GRAFT_ONLY=q_a,q_b runs a subset (slope measurements at large
     // SFs, per-query iteration); unset = the full surface (driver mode).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) =>
-        // A typo'd name silently selecting nothing would emit a plausible
-        // 0.000 total that reads as evidence — fail fast instead, naming
-        // the unmatched entries.
-        val unmatched = names.diff(SparkEntry.queries.keySet)
-        if (unmatched.nonEmpty) {
-          System.err.println(
-            s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unmatched.toSeq.sorted.mkString(", ")}")
-          sys.exit(2)
-        }
-        SparkEntry.queries.filter(q => names(q._1))
-      case None => SparkEntry.queries
+    val selected = try SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    catch { case e: IllegalArgumentException =>
+      System.err.println(e.getMessage)
+      sys.exit(2)
     }
+    warmUp(spark, sfDir)
     // Min of SPARK_GRAFT_RUNS (default 2) executions per query: single-run
     // timings on a 32-thread local JVM carry multi-second transients (GC
     // pauses, host CPU steal) that land on arbitrary queries — two
@@ -170,58 +68,11 @@ object Bench {
     val failName = sys.env.get("SPARK_GRAFT_FAIL")
     val rounds = (1 to runs).map { _ =>
       selected.map { case (name, fn) =>
-        val preexisting = spark.sparkContext.getPersistentRDDs.keySet
-        val t0 = System.nanoTime()
-        val res = (try {
+        name -> runAndRelease(spark) {
           if (failName.contains(name))
             throw new RuntimeException("deliberate SPARK_GRAFT_FAIL")
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-          Right((System.nanoTime() - t0) / 1e9): Either[String, Double]
-        } catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
-        })
-        // Release this query's materialized blocks OUTSIDE its timing.
-        // Materialize.checkpoint's localCheckpoint blocks are registered
-        // persistent and are NEVER reused across queries — left in place,
-        // 155 queries' worth of block residue squeezes the block manager
-        // and late checkpoint-heavy queries measure eviction pressure
-        // instead of their own cost (q_dedup_embed_banded read 20-24 s
-        // in full-suite position vs 9 s isolated before this cleanup;
-        // WHICH query paid depended on map iteration order, so adding a
-        // query 'regressed' an unrelated one). A real deployment runs
-        // one pipeline per job and its blocks die with it — per-query
-        // release is the honest analog. Scoped to the RDD ids this query
-        // REGISTERED (snapshot diff), not every persistent RDD in the
-        // context: a future warmup-cached table or cross-query shared
-        // frame added to Bench would otherwise be silently evicted after
-        // the first query and every later timing would re-pay its build.
-        // blocking=true: the release already runs outside the timed
-        // region, and an async removal would overlap the NEXT query's
-        // timing — the exact interference this cleanup exists to remove.
-        spark.sparkContext.getPersistentRDDs
-          .foreach { case (id, rdd) =>
-            if (!preexisting.contains(id)) rdd.unpersist(blocking = true)
-          }
-        // Broadcast residue release, same rationale as the RDD release
-        // above and OUTSIDE the timing: broadcast blocks (one per
-        // broadcast join/variable — the CC loops and dispatch seams
-        // build several per query) are only removed when the driver GCs
-        // their references, so across 155×2 queries they pile up in the
-        // block manager and late queries measure eviction/cleanup churn
-        // instead of their own cost — measured: the same CC-heavy rows
-        // read 1.5-2× slower in full-suite position than isolated with
-        // identical code. A real deployment runs one pipeline per job
-        // and its broadcasts die with it; the untimed GC is the honest
-        // analog. (SPARK_GRAFT_NO_GC=1 disables, for A/B.)
-        // The GC only ENQUEUES removals: ContextCleaner drains its queue
-        // on its own thread, so without a pause the block removals land
-        // inside the NEXT query's timed region (measured +0.5 s on many
-        // small rows). 300 ms drains the per-query handful of broadcasts.
-        if (!sys.env.contains("SPARK_GRAFT_NO_GC")) {
-          System.gc()
-          Thread.sleep(300)
+          fn(spark, sfDir)
         }
-        name -> res
       }
     }
     val results = selected.keys.map { name =>
@@ -291,5 +142,105 @@ object Bench {
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
     spark.stop()
+  }
+
+  /** Untimed session warm-up: JIT, codegen compiler, parquet reader and
+    * shuffle machinery init otherwise land entirely on the first query.
+    * Touches every table once so per-query timings measure the operator,
+    * not whichever query happens to pay the first footer read + page-cache
+    * fill for its table.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    Tables.names.foreach(t => Tables(spark, sfDir, t).count())
+    Tables(spark, sfDir, "region").groupBy("r_name").count().count()
+    // Warm the shared library JIT paths the suite leans on (regex split,
+    // md5/hash, higher-order array lambdas, window frames, joins, sketches):
+    // generated classes are per-plan, but the UTF8String/regex/hash-agg/
+    // sort machinery under them is common — measured ~3s off whichever
+    // query otherwise pays the first text-path compile at sf0.1. Tiny
+    // in-memory frames: the warmup costs ~2s once, not per query.
+    // Forced through the noop sink, NOT count(): under a bare count()
+    // ColumnPruning deletes every deterministic projection (and
+    // EliminateSorts the sort), so the paths this block exists to warm
+    // would never execute.
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    def force(df: DataFrame): Unit =
+      df.write.mode("overwrite").format("noop").save()
+    val txt = (1 to 64).map(i => (i.toLong, s"warm up the jit $i path a b c"))
+      .toDF("id", "text")
+    force(txt.select(col("id"), explode(split(col("text"), "\\s+")).as("t"))
+      .groupBy("t").agg(count(lit(1))))
+    force(txt.select(md5(col("text").cast("binary")),
+      substring(regexp_replace(col("text"), "[^a-z]", ""), 1, 4),
+      aggregate(transform(split(col("text"), " "), w => length(w)),
+        lit(0), (a, b) => a + b),
+      zip_with(split(col("text"), " "), split(col("text"), " "),
+        (a, b) => concat(a, b))))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(lit(1)).orderBy("id")
+    force(txt.withColumn("r", row_number().over(w)))
+    force(txt.join(broadcast(txt.limit(8).select(col("id").as("id2"))),
+      col("id") === col("id2")))
+    force(txt.select(approx_count_distinct("text"),
+      percentile_approx(col("id"), lit(0.5), lit(100))))
+    force(txt.orderBy(col("text").desc))
+  }
+
+  /** One timed execution of `query` through the noop sink, then the
+    * untimed release of what it left behind: Right(seconds), or Left(the
+    * error) when it throws.
+    */
+  def runAndRelease(spark: SparkSession)(
+      query: => DataFrame): Either[String, Double] = {
+    val preexisting = spark.sparkContext.getPersistentRDDs.keySet
+    val t0 = System.nanoTime()
+    val res = (try {
+      query.write.mode("overwrite").format("noop").save()
+      Right((System.nanoTime() - t0) / 1e9): Either[String, Double]
+    } catch { case e: Throwable =>
+      Left(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
+    })
+    // Release this query's materialized blocks OUTSIDE its timing.
+    // Materialize.checkpoint's localCheckpoint blocks are registered
+    // persistent and are NEVER reused across queries — left in place,
+    // 155 queries' worth of block residue squeezes the block manager
+    // and late checkpoint-heavy queries measure eviction pressure
+    // instead of their own cost (q_dedup_embed_banded read 20-24 s
+    // in full-suite position vs 9 s isolated before this cleanup;
+    // WHICH query paid depended on map iteration order, so adding a
+    // query 'regressed' an unrelated one). A real deployment runs
+    // one pipeline per job and its blocks die with it — per-query
+    // release is the honest analog. Scoped to the RDD ids this query
+    // REGISTERED (snapshot diff), not every persistent RDD in the
+    // context: a future warmup-cached table or cross-query shared
+    // frame added to Bench would otherwise be silently evicted after
+    // the first query and every later timing would re-pay its build.
+    // blocking=true: the release already runs outside the timed
+    // region, and an async removal would overlap the NEXT query's
+    // timing — the exact interference this cleanup exists to remove.
+    spark.sparkContext.getPersistentRDDs
+      .foreach { case (id, rdd) =>
+        if (!preexisting.contains(id)) rdd.unpersist(blocking = true)
+      }
+    // Broadcast residue release, same rationale as the RDD release
+    // above and OUTSIDE the timing: broadcast blocks (one per
+    // broadcast join/variable — the CC loops and dispatch seams
+    // build several per query) are only removed when the driver GCs
+    // their references, so across 155×2 queries they pile up in the
+    // block manager and late queries measure eviction/cleanup churn
+    // instead of their own cost — measured: the same CC-heavy rows
+    // read 1.5-2× slower in full-suite position than isolated with
+    // identical code. A real deployment runs one pipeline per job
+    // and its broadcasts die with it; the untimed GC is the honest
+    // analog.
+    // The GC only ENQUEUES removals: ContextCleaner drains its queue
+    // on its own thread, so without a pause the block removals land
+    // inside the NEXT query's timed region (measured +0.5 s on many
+    // small rows). 300 ms drains the per-query handful of broadcasts.
+    System.gc()
+    Thread.sleep(300)
+    res
   }
 }

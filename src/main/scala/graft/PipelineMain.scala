@@ -517,14 +517,9 @@ object PipelineMain {
     // rotating logs/sync.log at INFO + console at DEBUG/INFO per --debug
     graft.sources.PipelineLogger.active =
       new graft.sources.PipelineLogger(debug = c.debug)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(
+      master = sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      shufflePartitions = "4")
     try {
       if (c.compactStores.nonEmpty || c.compactIvfPq.nonEmpty) {
         try runMaintenance(spark, c) catch {

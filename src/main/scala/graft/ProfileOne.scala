@@ -1,11 +1,11 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool: run ONE SparkEntry query through the noop sink (after the
-  * Bench warmup + fixture prepare) and print every Spark job it ran —
-  * description, wall seconds, task count — plus per-stage shuffle bytes.
+/** Dev tool: run ONE SparkEntry query the way Bench times it (its
+  * warm-up, fixture prepare and timed run-then-release) and print every
+  * Spark job it ran — description, wall seconds, task count — plus
+  * per-stage shuffle bytes.
   * The per-job breakdown is the missing level between Bench's one number
   * per query and the full event log: it shows whether a composite's cost
   * is a few heavy shuffles or many small scheduler-bound jobs.
@@ -17,22 +17,8 @@ object ProfileOne {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileOne <query> [sfDir] [runs]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // the Bench warmup, abbreviated: touch tables + shared JIT paths
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.names.foreach(t => Tables(spark, sfDir, t).count())
+    val spark = GraftSession()
+    Bench.warmUp(spark, sfDir)
     SparkEntry.prepare(spark, sfDir, Set(name))
 
     final case class JobRow(id: Int, desc: String, sec: Double, tasks: Int,
@@ -74,16 +60,12 @@ object ProfileOne {
     val fn = SparkEntry.queries(name)
     (1 to runs).foreach { r =>
       jobs.clear(); starts.clear(); jobShufRead.clear(); jobShufWrite.clear()
-      val pre = spark.sparkContext.getPersistentRDDs.keySet
       listening = true
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      val total = (System.nanoTime() - t0) / 1e9
+      // the release's pause after the timed run lets late listener
+      // events drain while still listening
+      val total = Bench.runAndRelease(spark)(fn(spark, sfDir))
+        .fold(e => sys.error(s"$name failed: $e"), identity)
       listening = false
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pre.contains(id)) rdd.unpersist(blocking = true)
-      }
-      Thread.sleep(200) // let late listener events drain
       println(f"\n===== $name run $r: $total%.3f s, ${jobs.size} jobs =====")
       jobs.sortBy(_.id).foreach { j =>
         println(f"  job ${j.id}%4d ${j.sec}%7.3f s  stages=${j.tasks}%2d " +

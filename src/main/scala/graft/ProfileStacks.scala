@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ONE SparkEntry query in a loop with an in-JVM stack
   * sampler aggregating what every thread is doing — the level below
   * [[ProfileOne]]'s per-job table. ProfileOne showed several rows whose
@@ -20,41 +18,31 @@ object ProfileStacks {
       sys.error("usage: ProfileStacks <query> [sfDir] [runs]"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Tables.names.foreach(t => Tables(spark, sfDir, t).count())
+    val spark = GraftSession()
+    Bench.warmUp(spark, sfDir)
     SparkEntry.prepare(spark, sfDir, Set(name))
 
     val fn = SparkEntry.queries(name)
-    // one untimed warmup run so codegen/JIT of the steady-state plans is
-    // not what the samples show
-    fn(spark, sfDir).write.mode("overwrite").format("noop").save()
+    def run(): Double = Bench.runAndRelease(spark)(fn(spark, sfDir))
+      .fold(e => sys.error(s"$name failed: $e"), identity)
+    // one unsampled run so codegen/JIT of the steady-state plans is not
+    // what the samples show
+    run()
 
     val buckets = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
     @volatile var sampling = false
     def classify(tname: String, frames: Array[StackTraceElement]): Option[String] = {
       if (frames.isEmpty) return None
       val fs = frames.map(_.toString)
-      // skip idle threads (park/wait at the top)
+      // skip idle threads (park/wait/sleep at the top)
       val top = fs.head
       if (top.contains("Unsafe.park") || top.contains("Object.wait") ||
+          top.contains("Thread.sleep") ||
           top.contains("epollWait") || top.contains("socketAccept") ||
           top.contains("PlatformEvent") || top.contains("waitForReference"))
         return None
       val executor = tname.startsWith("Executor task launch")
-      val side = if (executor) "exec" else "drv "
+      val side = if (executor) "exec " else "drv  "
       def first(p: String => Boolean): Option[String] = fs.find(p)
       val tag =
         first(f => f.contains("janino") || f.contains("JavaCode") ||
@@ -124,18 +112,12 @@ object ProfileStacks {
     sampler.setDaemon(true)
     sampler.start()
 
-    val t0 = System.nanoTime()
+    // the untimed release between runs is sampled too: its sleep is
+    // skipped as idle, its GC call and cleaner work show
     sampling = true
-    (1 to runs).foreach { _ =>
-      val pre = spark.sparkContext.getPersistentRDDs.keySet
-      fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!pre.contains(id)) rdd.unpersist(blocking = true)
-      }
-    }
+    val wall = (1 to runs).map(_ => run()).sum
     sampling = false
-    val wall = (System.nanoTime() - t0) / 1e9
-    println(f"\n===== $name x$runs: $wall%.2f s wall, samples every 10ms =====")
+    println(f"\n===== $name x$runs: $wall%.2f s timed, samples every 10ms =====")
     import scala.jdk.CollectionConverters._
     val rows = buckets.asScala.toSeq.map { case (k, v) => (k, v.get) }
       .sortBy(-_._2)

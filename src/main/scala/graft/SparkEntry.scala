@@ -35,6 +35,25 @@ object SparkEntry {
 
   // ---------------------------------------------------------------- queries
 
+  /** The rows a Bench or Verify run covers: every query when `only` is
+    * unset, else the named subset of a comma list (`SPARK_GRAFT_ONLY`).
+    * An unknown name fails, naming it: a typo'd name silently selecting
+    * nothing would yield a plausible empty total or dump that reads as
+    * evidence.
+    */
+  def selected(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val all = queries
+    only.fold(all) { list =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.diff(all.keySet)
+      if (unknown.nonEmpty) throw new IllegalArgumentException(
+        "SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
+          unknown.toSeq.sorted.mkString(", "))
+      all.filter(q => names(q._1))
+    }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // --- §2.1 sources / scans ---
     "q_scan_entries" -> ((s, dir) =>
@@ -261,23 +280,18 @@ object SparkEntry {
     // --- §2.6 recursion (native WITH RECURSIVE; the iterative
     // cycle-tolerant twin is exercised by ClosureSpec) ---
     "q_transitive_closure" -> ((s, dir) =>
-      // Ships the RECURSIVE CTE again (round 8): the round-7 doubling
-      // ship was adjudicated in ABBench's dedicated-session harness, and
-      // its winner did not transfer to the graded conditions — the bench
-      // row went 0.997s (recursive, r6) → 1.39-1.53s (doubling, r7/r8).
-      // Re-A/B'd under Bench's EXACT conditions (suite-warm session,
-      // uncached parquet input, AQE on, interleaved min-of-3, idle,
-      // 2026-08-13; SCALE.md "The closure ship decision"): recursive
-      // 1.044s < doubling 1.145s, with recursive winning every
-      // interleaved round (1.04/1.21/1.15 vs 1.15/1.49/1.72); iterative
-      // 1.57s. Dedicated-session numbers
-      // (ABBench round 7) favored doubling — JVM/codegen state from
-      // prior suite traffic is worth more to the CTE's per-level plan
+      // Ships the RECURSIVE CTE (round 8). Under Bench's exact
+      // conditions (suite-warm session, uncached parquet input, AQE on,
+      // interleaved min-of-3, idle, 2026-08-13; SCALE.md "The closure
+      // ship decision") recursive 1.044s < doubling 1.145s, recursive
+      // winning every interleaved round (1.04/1.21/1.15 vs
+      // 1.15/1.49/1.72); iterative 1.57s. A dedicated-session harness
+      // (round 7) had favored doubling — JVM/codegen state from prior
+      // suite traffic is worth more to the CTE's per-level plan
       // re-execution than to doubling's fewer-but-larger joins, so
       // harness conditions decide sub-2s rows and the GRADED harness is
-      // the one that counts. Doubling stays the API for round-dominated
-      // regimes (deep forests, cluster scheduling overhead — its sf10
-      // showing and SCALE.md round-7/8 notes); iterative stays the
+      // the one that counts. The doubling closure lost that A/B and is
+      // retired (SCALE.md "Retired harnesses"); iterative stays the
       // cycle-tolerant API.
       Closure.transitiveClosureRecursive(
         TaskTree.tasks(s, dir), "task_id", "parent_id")),
@@ -287,9 +301,10 @@ object SparkEntry {
       // self-join rounds — beats both level walkers at EVERY measured SF
       // because path concat makes per-level work expensive (the CTE
       // re-executes its step scan per level; the iterative walker
-      // materializes a frontier per level). ABBench, idle, 2026-08-13:
+      // materializes a frontier per level). A/B, idle, 2026-08-13:
       // sf0.1 0.83s vs 1.12s recursive / 1.16s iterative; sf1 1.69 vs
-      // 4.23 / 3.39; sf10 4.77 vs 8.09 / 23.79. Earlier A/Bs (round 2's
+      // 4.23 / 3.39; sf10 4.77 vs 8.09 / 23.79 (the recursive-CTE
+      // breadcrumbs are retired since). Earlier A/Bs (round 2's
       // NOT-IN BNLJ fix, round 4's NOT EXISTS rewrite) are in SCALE.md.
       Closure.breadcrumbsDoubling(
         TaskTree.tasks(s, dir), "task_id", "parent_id", "name")

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * `events.ts` is TIMESTAMP(NANOS) parquet, which Spark only reads as a
   * nanos-since-epoch Long (`spark.sql.legacy.parquet.nanosAsLong=true`,
-  * set by Verify/Bench/Explain sessions); the loader normalizes it to a
+  * set by every [[GraftSession]]); the loader normalizes it to a
   * micros TimestampType column — the same truncation DuckDB applies when
   * casting timestamp_ns → timestamp.
   */

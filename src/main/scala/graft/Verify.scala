@@ -1,44 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = session()
-    // Deployment knobs for at-scale evidence runs: verify the whole
-    // surface under the cluster-durability materialization mode
-    // (SPARK_GRAFT_MATERIALIZE_MODE=reliable with ..._DIR pointing at a
-    // real checkpoint directory) without touching operator code.
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_MODE")
-      .foreach(spark.conf.set(Materialize.ModeKey, _))
-    sys.env.get("SPARK_GRAFT_MATERIALIZE_DIR")
-      .foreach(spark.conf.set(Materialize.DirKey, _))
-    new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q_a,q_b — iterate on a subset without paying the
     // full 150+-query surface; the driver never sets it, so round
     // evidence always covers everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(ns) => SparkEntry.queries.filter(kv => ns(kv._1))
-      case None => SparkEntry.queries
-    }
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_ONLY"))
+    val spark = GraftSession()
+    new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -75,7 +47,7 @@ object Verify {
 object DumpOne {
   def main(args: Array[String]): Unit = {
     val Array(name, sfDir, outDir) = args
-    val spark = Verify.session()
+    val spark = GraftSession()
     SparkEntry.queries(name)(spark, sfDir).coalesce(1)
       .write.mode("overwrite").parquet(s"$outDir/$name")
     spark.stop()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.IntegerType
   * extension hook:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * val spark = graft.GraftSession() // installs this extension
   * // or: --conf spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT rolling_hash(text, 8) FROM docs")
   * }}}
@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.IntegerType
   * `simhash64`, `Similarity.dot` and everything built on them) resolve the
   * functions BY NAME via `call_function`, so a session created without this
   * extension fails analysis with UNRESOLVED_ROUTINE. Either build the
-  * session `withExtensions(new GraftExtensions)` / set
+  * session through `graft.GraftSession` (or any builder's
+  * `withExtensions(new GraftExtensions)`) / set
   * `spark.sql.extensions=graft.functions.GraftExtensions`, or call
   * [[GraftExtensions.register]] on an already-built session (idempotent).
   */

@@ -672,13 +672,7 @@ object Similarity {
   private[graft] def withCell(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ordered = cents.sortBy(_._1)
-    // single-Literal model artifacts (the bookMat/bpeTokens shape): at
-    // the √n law cell count the old CreateArray matrix was k×dim
-    // literal nodes (≈2,900 at sf0.1's k=45) re-walked by every
-    // analyzer pass — plan-construction overhead, not row work
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (mat, cidArr) = centroidConsts(cents)
     corpus.select(col(idCol), col(vecCol),
       element_at(cidArr,
         call_function("vec_argmax_cell", col(vecCol), mat) + 1).as("_cell"))
@@ -705,10 +699,7 @@ object Similarity {
       withCell(corpus, idCol, vecCol, cents)
         .where(col("_cell").isNotNull)
     } else {
-      val ordered = cents.sortBy(_._1)
-      // single-Literal model (see withCell)
-      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-      val cidArr = modelConst(typedlit(ordered.map(_._1)))
+      val (mat, cidArr) = centroidConsts(cents)
       corpus.select(col(idCol), col(vecCol),
         explode(transform(
           call_function("vec_top_cells", col(vecCol), mat, lit(nprobe)),
@@ -892,8 +883,7 @@ object Similarity {
   def inertia(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): Double = {
-    val ordered = cents.sortBy(_._1)
-    val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
+    val (mat, _) = centroidConsts(cents)
     corpus
       .select((lit(1.0) - cosine(col(vecCol),
         element_at(mat,
@@ -943,8 +933,7 @@ object Similarity {
     // would fail vec_argmax_cell's analysis — and fall through to the
     // first-k pad, which is the only meaningful answer there
     (1 to (if (first.isEmpty) 0 else rounds)).foreach { r =>
-      val ordered = cands.sortBy(_._1)
-      val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
+      val (mat, _) = centroidConsts(cands)
       val scored = clean.select(col("_id"), col("_v"),
         (lit(1.0) - cosine(col("_v"),
           element_at(mat,
@@ -1049,54 +1038,6 @@ object Similarity {
       case null => 0.0
     }.toSeq
 
-  /** One per-iteration observation from [[kmeansFitTrace]]: round number
-    * (1-based), wall seconds for the round, and the max absolute
-    * per-coordinate centroid shift vs the previous round (over cells
-    * present in both — a dropped empty cell does not register as shift).
-    */
-  final case class KmeansIter(iter: Int, seconds: Double, maxShift: Double)
-
-  /** [[kmeansFit]] with per-iteration observability and an optional
-    * convergence stop: identical arithmetic round for round (the fold
-    * just records wall time and centroid shift between rounds), so
-    * `kmeansFitTrace(...).model == kmeansFit(...)` — spec-pinned.
-    * Training stops early once the max centroid shift falls to `tol` or
-    * below (a zero shift always stops: an exact fixpoint cannot move
-    * again, so the model still equals the full-`iters` run); the trace's
-    * length IS the iterations-to-convergence evidence (SCALE.md records
-    * the sf1/sf10 rows). Per-round cost is one map-side corpus scan against
-    * broadcast-literal centroids plus the k×dim partial-sum shuffle —
-    * flat per round, which the per-iteration seconds make measurable.
-    */
-  def kmeansFitTrace(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      k: Int = 4, iters: Int = 4, tol: Double = 0.0)
-      : (Seq[(Long, Seq[Double])], Seq[KmeansIter]) = {
-    val seeds = seedCentroids(corpus, idCol, vecCol, k)
-    val trace = Seq.newBuilder[KmeansIter]
-    var cents = seeds
-    var it = 0
-    var shift = Double.MaxValue
-    while (it < iters && shift > tol) {
-      it += 1
-      val t0 = System.nanoTime()
-      val next = meansOf(
-        withCell(corpus, idCol, vecCol, cents).select(col(vecCol), col("_cell")),
-        vecCol)
-      val sec = (System.nanoTime() - t0) / 1e9
-      val prev = cents.toMap
-      shift = next.flatMap { case (cid, cv) =>
-        prev.get(cid).map(pv => cv.zip(pv).map { case (a, b) => math.abs(a - b) }.max)
-      } match {
-        case Nil => 0.0
-        case ds => ds.max
-      }
-      trace += KmeansIter(it, sec, shift)
-      cents = next
-    }
-    (cents, trace.result())
-  }
-
   /** recall@k of an approximate ANN result against ground truth: the
     * fraction of truth (query_id, neighbor_id) pairs the approximate
     * result recovered. Engine-side (one semi join + two counts) — works
@@ -1125,14 +1066,12 @@ object Similarity {
       k: Int = 4): DataFrame = {
     val cents = kmeansFit(corpus, idCol, vecCol, k, iters = 1)
     // native argmax + ONE cosine against the winning centroid (decoded
-    // from the same literal matrix): identical cell/score contract as
+    // from the same model matrix): identical cell/score contract as
     // the k-inlined array_max(struct...) formulation this replaces —
     // which blew the codegen method limits past a few dozen centroids
     // (the cellsByLiteral lesson) and priced 2k cosines per row where
     // the law k = ⌈√n⌉ needs k + 1
-    val ordered = cents.sortBy(_._1)
-    val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
-    val cidArr = array(ordered.map(c => lit(c._1)): _*)
+    val (mat, cidArr) = centroidConsts(cents)
     val idx = call_function("vec_argmax_cell", col(vecCol), mat)
     // the score is a DIAGNOSTIC, not an oracle-comparable value: it is
     // a cosine against 6dp-rounded means, and those means are not
@@ -1636,16 +1575,31 @@ object Similarity {
 
   // ONE Literal node, not array(array(lit...)): a CreateArray tree of
   // m×ks×subDim literal children is re-traversed by every analyzer pass
-  // and re-evaluated per foldable check — the bpeTokens lesson (ABBench
-  // `bpe` measured the two shapes); typedlit collapses the whole
-  // codebook to a single O(1)-eval node. Wrapped in `model_const`
-  // (graft.functions.ModelConst) so the EXECUTED plan renders/hashes it
-  // in O(1): Literal.toString renders every element, and Spark
-  // stringifies the executed plan per action AND per AQE re-plan — the
-  // measured driver-side bulk of the PQ family after the literal
-  // collapse (ProfileStacks, round 18).
+  // and re-evaluated per foldable check — the bpeTokens lesson (SCALE.md
+  // "BPE at the production operating point" measured the two shapes);
+  // typedlit collapses the whole codebook to a single O(1)-eval node.
+  // Wrapped in `model_const` (graft.functions.ModelConst) so the
+  // EXECUTED plan renders/hashes it in O(1): Literal.toString renders
+  // every element, and Spark stringifies the executed plan per action
+  // AND per AQE re-plan — the measured driver-side bulk of the PQ family
+  // after the literal collapse (ProfileStacks, round 18).
   private[ops] def modelConst(c: Column): Column =
     call_function("model_const", c)
+
+  /** A centroid model as the id-ordered `(matrix, ids)` pair of
+    * [[modelConst]]s the native cell kernels read: matrix row `i` is the
+    * centroid whose id is `ids[i + 1]` (`element_at`'s 1-based decode of
+    * a kernel's 0-based index). The one carrier for every k-means-family
+    * model: as a CreateArray tree the matrix was k×dim literal nodes
+    * (≈2,900 at sf0.1's k=45) re-walked by every analyzer pass —
+    * plan-construction overhead, not row work.
+    */
+  private[ops] def centroidConsts(
+      cents: Seq[(Long, Seq[Double])]): (Column, Column) = {
+    val ordered = cents.sortBy(_._1)
+    (modelConst(typedlit(ordered.map(_._2.toSeq))),
+      modelConst(typedlit(ordered.map(_._1))))
+  }
 
   private def bookMat(book: Seq[Seq[Double]]): Column =
     modelConst(typedlit(book.map(_.toSeq).toSeq))
@@ -2104,9 +2058,7 @@ object Similarity {
   private def withCellResid(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ordered = cents.sortBy(_._1)
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (mat, cidArr) = centroidConsts(cents)
     val ci = call_function("vec_argmax_cell", col(vecCol), mat)
     corpus.select(col(idCol), col(vecCol),
       element_at(cidArr, ci + 1).as("_cell"),
@@ -2128,9 +2080,7 @@ object Similarity {
         .where(col("_cell").isNotNull)
         .select(col(idCol), col("_cell"), col("_rv"))
     else {
-      val ordered = cents.sortBy(_._1)
-      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-      val cidArr = modelConst(typedlit(ordered.map(_._1)))
+      val (mat, cidArr) = centroidConsts(cents)
       queries
         .select(col(idCol), col(vecCol),
           explode(call_function("vec_top_cells", col(vecCol), mat,

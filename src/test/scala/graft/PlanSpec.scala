@@ -593,6 +593,33 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q_kmeans_assign carries its centroid model as model_const, not " +
+    "a k×dim Literal/CreateArray tree") {
+    import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.types.ArrayType
+    val df = SparkEntry.queries("q_kmeans_assign")(spark, dir)
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val exprs = physical.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    def isMatrix(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.dataType match {
+        case ArrayType(ArrayType(_, _), _) => true
+        case _ => false
+      }
+    assert(exprs.exists {
+      case m: graft.functions.ModelConst => isMatrix(m)
+      case _ => false
+    }, s"expected a model_const centroid matrix in:\n$physical")
+    val trees = exprs.collect {
+      case l: Literal if isMatrix(l) => l
+      case c: CreateArray if c.children.exists(_.isInstanceOf[CreateArray]) => c
+    }
+    assert(trees.isEmpty, s"k×dim literal trees left in the plan:\n$physical")
+  }
+
   test("pqTopK: queries broadcast, corpus streams, and the ADC top-k is " +
     "partial-aggregable — no row_number window over the scored pairs") {
     val emb = Tables(spark, dir, "embeddings")

@@ -108,45 +108,19 @@ class ClosureSpec extends SparkSpec {
     "(an ETL closure legitimately exceeds the interactive default)") {
     val key = "spark.sql.cteRecursionRowLimit"
     val before = spark.conf.getOption(key)
+    val forest = tree.where(!$"task_id".isin("7", "8"))
     try {
       spark.conf.set(key, 1000000)
-      Closure.transitiveClosureRecursive(
-        tree.where(!$"task_id".isin("7", "8")), "task_id", "parent_id").count()
+      Closure.transitiveClosureRecursive(forest, "task_id", "parent_id").count()
       assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
       // never LOWERED if a session already set it higher than our target
       spark.conf.set(key, Int.MaxValue)
-      Closure.breadcrumbsRecursive(tree, "task_id", "parent_id", "name").count()
+      Closure.transitiveClosureRecursive(forest, "task_id", "parent_id").count()
       assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-  }
-
-  test("pointer-doubling closure matches the fixpoint, incl. a deep chain") {
-    val forest = tree.where(!$"task_id".isin("7", "8")) // acyclic input only
-    val iter = Closure.transitiveClosure(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    val dbl = Closure.transitiveClosureDoubling(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    assert(iter.toSeq == dbl.toSeq)
-    // depth 10 (crosses three doubling rounds: spans 1,2,4,8,16) — and on a
-    // forest doubling must emit each pair EXACTLY once with no dedup step
-    val chain = (1 to 10).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
-    val c = Closure.transitiveClosureDoubling(chain, "task_id", "parent_id")
-    assert(c.count() === 55) // sum 1..10, no duplicates
-    assert(c.distinct().count() === 55)
-    assert(c.where($"descendant_id" === "10").count() === 10)
-  }
-
-  test("recursive-CTE breadcrumbs: cycle-safe, matches iterative") {
-    val iter = Closure.breadcrumbs(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    val rec = Closure.breadcrumbsRecursive(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    assert(iter.toSeq == rec.toSeq) // incl. NULL breadcrumbs for the 7<->8 cycle
   }
 
   test("doubling breadcrumbs: orphan + cycle semantics match iterative, deep chain composes") {
@@ -165,7 +139,7 @@ class ClosureSpec extends SparkSpec {
     assert(bc === (1 to 11).map(i => s"n$i").mkString(" / "))
   }
 
-  test("depth-cap boundary is unified: all four closure variants agree " +
+  test("depth-cap boundary is unified: all three closure variants agree " +
     "at exactly maxDepth and maxDepth+1") {
     val chain = (1 to 8).map(i =>
       (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
@@ -173,11 +147,8 @@ class ClosureSpec extends SparkSpec {
     for (cap <- Seq(4, 5)) {
       val iter = Closure.transitiveClosure(chain, "task_id", "parent_id",
         maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
-      val dbl = Closure.transitiveClosureDoubling(chain, "task_id", "parent_id",
-        maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
       val rec = Closure.transitiveClosureRecursive(chain, "task_id", "parent_id",
         maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
-      assert(iter == dbl, s"iterative vs doubling at cap $cap")
       assert(iter == rec, s"iterative vs recursive at cap $cap")
       assert(iter.map(r => (r.getString(0), r.getString(1))) ==
         resolvedClosure(chain, cap), s"iterative vs resolver at cap $cap")
@@ -186,7 +157,7 @@ class ClosureSpec extends SparkSpec {
     }
   }
 
-  test("depth-cap boundary is unified: all four breadcrumb variants agree " +
+  test("depth-cap boundary is unified: all three breadcrumb variants agree " +
     "at exactly maxDepth and maxDepth+1") {
     val chain = (1 to 8).map(i =>
       (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
@@ -195,30 +166,16 @@ class ClosureSpec extends SparkSpec {
       val iter = Closure.breadcrumbs(chain, "task_id", "parent_id", "name",
         maxDepth = cap).select("task_id", "breadcrumb").orderBy("task_id")
         .collect().toSeq
-      val rec = Closure.breadcrumbsRecursive(chain, "task_id", "parent_id",
-        "name", maxDepth = cap).select("task_id", "breadcrumb")
-        .orderBy("task_id").collect().toSeq
       val dbl = Closure.breadcrumbsDoubling(chain, "task_id", "parent_id",
         "name", maxDepth = cap).select("task_id", "breadcrumb")
         .orderBy("task_id").collect().toSeq
       val res = Closure.breadcrumbsResolved(chain, "task_id", "parent_id",
         "name", maxDepth = cap).select("task_id", "breadcrumb")
         .orderBy("task_id").collect().toSeq
-      assert(iter == rec, s"walker vs recursive at cap $cap")
       assert(iter == dbl, s"walker vs doubling at cap $cap")
       assert(iter == res, s"walker vs resolver at cap $cap")
       // levels ≤ cap have paths; deeper nodes NULL
       assert(iter.count(!_.isNullAt(1)) == cap)
     }
-  }
-
-  test("doubling closure on cyclic input degrades to the iterative set " +
-    "with assumeForest = false") {
-    val iter = Closure.transitiveClosure(tree, "task_id", "parent_id",
-      maxDepth = 50).orderBy("descendant_id", "ancestor_id").collect().toSeq
-    val dbl = Closure.transitiveClosureDoubling(tree, "task_id", "parent_id",
-      maxDepth = 50, assumeForest = false)
-      .orderBy("descendant_id", "ancestor_id").collect().toSeq
-    assert(iter == dbl) // incl. the 7<->8 cycle pairs, deduplicated
   }
 }

@@ -280,30 +280,6 @@ class DedupTextSpec extends SparkSpec {
     assert(Similarity.numPlanesFor(256L * 4L) === 2)
   }
 
-  test("kmeansFitTrace: same model as kmeansFit, converges under tol") {
-    // seeds are the first k vectors by id — put one in each true cluster
-    // so Lloyd's converges in a couple of rounds
-    val vecs = (Seq((0L, Seq(1f, 0f, 0f)), (1L, Seq(0f, 1f, 0f))) ++
-      (2 until 20).map { i =>
-        val m = 1f + (i % 5) * 0.1f
-        (i.toLong, if (i % 2 == 0) Seq(m, 0f, 0f) else Seq(0f, m, 0f))
-      }).toDF("vec_id", "embedding")
-    val plain = Similarity.kmeansFit(vecs, "vec_id", "embedding", 2, 3)
-    val (traced, trace) =
-      Similarity.kmeansFitTrace(vecs, "vec_id", "embedding", 2, 3, tol = 0.0)
-    assert(traced === plain, "trace must not change the arithmetic")
-    // may stop before 3 rounds only at an exact fixpoint (shift 0), where
-    // further rounds provably cannot change the model
-    assert(trace.length <= 3 && trace.nonEmpty)
-    if (trace.length < 3) assert(trace.last.maxShift === 0.0)
-    // axis-aligned clusters: assignment is stable after round 1, so the
-    // shift hits zero and a tolerance stops training early
-    val (_, early) =
-      Similarity.kmeansFitTrace(vecs, "vec_id", "embedding", 2, 10, tol = 1e-9)
-    assert(early.length <= 3, s"expected early convergence, got $early")
-    assert(early.last.maxShift <= 1e-9)
-  }
-
   test("kmeansFitSampled: deterministic hash-sample trainer — frac=1 is " +
     "exactly kmeansFit, a 20% sample recovers the planted clusters and " +
     "its full-corpus assignment matches the full-trained model") {
